@@ -208,7 +208,9 @@ object Bench {
     // truncating mid-object (which cost r13 its entire round-over-round
     // per-query comparison: n_common=0). Values, methodology, and the
     // one-line stdout contract are unchanged.
-    def fmt(v: Double): String = f"$v%.4f"
+    // Locale.ROOT: a de_DE default locale would print 1,2345 and break
+    // the JSON
+    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.4f", v)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -230,7 +232,7 @@ object Bench {
     // loadavg at start/end — the provenance that makes two diverging
     // full runs adjudicable from the artifacts alone
     try {
-      def d(v: Double) = if (v.isNaN) "-1" else f"$v%.4f"
+      def d(v: Double) = if (v.isNaN) "-1" else fmt(v)
       val detail = results.map { case (name, reported) =>
         val all = attemptLog.getOrElse(name, Nil)
         val ok = all.filter(_ >= 0).sorted
@@ -241,7 +243,7 @@ object Bench {
           s""""min":${d(if (ok.isEmpty) -1.0 else ok.head)},"median":${d(med)},""" +
           s""""reported":${d(reported)}}"""
       }.mkString("{", ",", "}")
-      val dj = s"""{"sf":"$sfDir","loadavg_start":"${loadSamples.head}","loadavg_end":"${loadSamples.last}","total_reported":${f"$total%.4f"},"queries":$detail}"""
+      val dj = s"""{"sf":"$sfDir","loadavg_start":"${loadSamples.head}","loadavg_end":"${loadSamples.last}","total_reported":${fmt(total)},"queries":$detail}"""
       val outName =
         if (persistArtifacts) benchOut.stripSuffix(".json") + "_detail.json"
         else "target/bench_detail_scoped.json"

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S1/P6/P7/A5/V7 (SURVEY.md §2.1, §2.3): dataset directory-tree scan →
@@ -20,7 +19,7 @@ object FileCatalog {
   /** P6 (utils.py:91-101 FILE_TYPE_MATCHERS): extension → type tag,
     * first-match CASE chain over the enum in file_info_schema.yml.
     */
-  def typeTag(pathCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def typeTag(pathCol: Column): Column =
     when(pathCol.rlike("(?i)\\.csv$"), "csv")
       .when(pathCol.rlike("(?i)\\.tsv$"), "tsv")
       .when(pathCol.rlike("(?i)\\.(hdf5|h5)$"), "hdf5")
@@ -60,31 +59,28 @@ object FileCatalog {
                                 edamTerm: String, isQaQc: Boolean = false,
                                 isDataProduct: Boolean = false)
 
-  /** P7: ordered first-match annotation — broadcast rules, `rlike` join,
-    * priority `row_number`, template expansion via regexp_extract.
+  /** P7: ordered first-match annotation — one CASE chain per output
+    * column over the rules in order, like [[typeTag]], with template
+    * expansion via regexp_extract. A per-row projection: no join, no
+    * window, no shuffle. Output is the listing with `rel_path` first,
+    * then description, edam_term, is_qa_qc, is_data_product.
     */
   def annotate(listing: DataFrame, rules: Seq[ManifestRule]): DataFrame = {
-    val spark = listing.sparkSession
-    import spark.implicits._
-    val rulesDf = rules.zipWithIndex.map { case (r, i) =>
-      (r.pattern, r.descriptionTemplate, r.edamTerm, r.isQaQc, r.isDataProduct, i)
-    }.toDF("pattern", "description_template", "edam_term", "is_qa_qc", "is_data_product", "priority")
-    val w = Window.partitionBy("rel_path").orderBy("priority")
-    val matched = listing
-      .join(broadcast(rulesDf), expr("rel_path rlike pattern"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .withColumn("description",
-        // only templated rules reference a capture group; guarding keeps
-        // regexp_extract from rejecting group-less patterns
-        when(col("description_template").contains("{g1}"),
-          regexp_replace(col("description_template"), lit("\\{g1\\}"),
-            expr("regexp_extract(rel_path, pattern, 1)")))
-          .otherwise(col("description_template")))
-      .select("rel_path", "description", "edam_term", "is_qa_qc", "is_data_product")
-    listing.join(matched, Seq("rel_path"), "left")
-      .na.fill(Map("description" -> "", "edam_term" -> ""))
-      .na.fill(Map("is_qa_qc" -> false, "is_data_product" -> false))
+    val path = col("rel_path")
+    def firstMatch(value: ManifestRule => Column, default: Column): Column =
+      rules.foldRight(default)((r, rest) => when(path.rlike(r.pattern), value(r)).otherwise(rest))
+    // only templated rules reference a capture group; guarding keeps
+    // regexp_extract away from group-less patterns
+    def description(r: ManifestRule): Column =
+      if (r.descriptionTemplate.contains("{g1}"))
+        regexp_replace(lit(r.descriptionTemplate), lit("\\{g1\\}"),
+          regexp_extract(path, r.pattern, 1))
+      else lit(r.descriptionTemplate)
+    listing.select((path +: listing.columns.toIndexedSeq.filter(_ != "rel_path").map(col)) ++ Seq(
+      firstMatch(description, lit("")).as("description"),
+      firstMatch(r => lit(r.edamTerm), lit("")).as("edam_term"),
+      firstMatch(r => lit(r.isQaQc), lit(false)).as("is_qa_qc"),
+      firstMatch(r => lit(r.isDataProduct), lit(false)).as("is_data_product")): _*)
   }
 
   /** A5 (utils.py:770-796): per-type file stats; the MAX_IN_LINE_FILES

@@ -34,6 +34,21 @@ class EnvelopeSpec extends SparkSpec {
     assert(Envelope.validate(env).count() == 0)
   }
 
+  test("a dataset that appears only in contributors yields no envelope row") {
+    val (md, listing, contribs) = fixtures
+    val extra = Seq(("d3", "Cy", "Inst", "0000-3", "yes", "cy@x.org"))
+      .toDF("dataset_id", "name", "affiliation", "orcid_id", "is_contact", "email")
+    val env = Envelope.assemble(md, listing, contribs.unionByName(extra), Seq(("graft", "a", "o", "1")))
+    assert(env.select("dataset_id").as[String].collect().sorted.toSeq == Seq("d1", "d2"))
+  }
+
+  test("assemble is one shuffle") {
+    val (md, listing, contribs) = fixtures
+    val env = Envelope.assemble(md, listing, contribs, Seq(("graft", "a", "o", "1")))
+    val plan = env.queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllMatchIn(plan).length == 1 && !plan.contains("Join"), plan)
+  }
+
   test("validate reports missing provenance") {
     val (md, listing, contribs) = fixtures
     val env = Envelope.assemble(md, listing, contribs, Seq.empty)

@@ -36,6 +36,36 @@ class FileCatalogSpec extends SparkSpec {
     assert(dp == Seq("raw/sample_001.csv"))
   }
 
+  test("annotate keeps its output schema: listing columns, then the four annotations") {
+    val got = FileCatalog.annotate(FileCatalog.scan(spark, root).withColumn("dataset_id", lit("d")),
+      Seq(FileCatalog.ManifestRule("\\.tsv$", "tabular metadata", "EDAM:0002")))
+    assert(got.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq == Seq(
+      "rel_path" -> "string", "size" -> "bigint", "modified" -> "timestamp", "type" -> "string",
+      "dataset_id" -> "string", "description" -> "string", "edam_term" -> "string",
+      "is_qa_qc" -> "boolean", "is_data_product" -> "boolean"))
+    // rel_path leads even when the listing does not start with it
+    val reordered = FileCatalog.annotate(Seq(("x", "a.tsv")).toDF("dataset_id", "rel_path"), Nil)
+    assert(reordered.columns.toSeq == Seq("rel_path", "dataset_id",
+      "description", "edam_term", "is_qa_qc", "is_data_product"))
+    assert(reordered.as[(String, String, String, String, Boolean, Boolean)].collect().toSeq ==
+      Seq(("a.tsv", "x", "", "", false, false)))
+  }
+
+  test("annotate resolves overlapping rules by rule order, without a shuffle") {
+    val listing = Seq("raw/a.fastq", "raw/b.csv", "c.txt").toDF("rel_path")
+    def described(rules: FileCatalog.ManifestRule*): Map[String, (String, Boolean)] =
+      FileCatalog.annotate(listing, rules).select("rel_path", "description", "is_qa_qc")
+        .as[(String, String, Boolean)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val byExt = FileCatalog.ManifestRule("\\.fastq$", "reads", "EDAM:1")
+    val byDir = FileCatalog.ManifestRule("^raw/(\\w+)\\.", "raw {g1}", "EDAM:2", isQaQc = true)
+    assert(described(byExt, byDir) == Map(
+      "raw/a.fastq" -> ("reads", false), "raw/b.csv" -> ("raw b", true), "c.txt" -> ("", false)))
+    assert(described(byDir, byExt) == Map(
+      "raw/a.fastq" -> ("raw a", true), "raw/b.csv" -> ("raw b", true), "c.txt" -> ("", false)))
+    val plan = FileCatalog.annotate(listing, Seq(byExt, byDir)).queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
+  }
+
   test("stats aggregates per type") {
     val got = FileCatalog.stats(FileCatalog.scan(spark, root))
       .select("type", "n_files").as[(String, Long)].collect().toMap
