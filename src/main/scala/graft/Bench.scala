@@ -12,52 +12,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner only reclaims dead broadcast/shuffle/RDD state when
-      // the JVM actually GCs (it works off weak references); a 349-query
-      // run generates thousands of them but little allocation pressure
-      // between queries, so with the 30-min default the whole run can
-      // finish before a single cleaner sweep. The accumulated dead
-      // broadcast blocks squeeze the unified-memory execution pool and
-      // dead shuffle files pin disk (the sf10 sweep hit disk-full on 54 GB
-      // of DEAD shuffle files; at sf0.1 the same backlog measured q276
-      // 7 s scoped-fresh vs 21-27 s in-run). 2 min bounds the backlog.
-      // NOTE: any cross-HARNESS comparison (e.g. against a reference
-      // runner without forced GC) must run both sides under the same
-      // GC policy — within this harness before/after numbers both
-      // include it, so round-over-round comparisons are unaffected.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // builder-side scale sweeps measure the PRODUCTION config
     // (spark.graft.autosize=true) without editing code; the driver's
     // rounds set nothing, so its numbers stay on the oracle defaults
     sys.env.get("SPARK_GRAFT_AUTOSIZE")
       .foreach(v => spark.conf.set(graft.plans.Autosize.Key, v))
-    // warm up the session (codegen, shuffle machinery) and every table's
-    // scan path (parquet footers, file listing, page cache) so the first
-    // query touching a table doesn't absorb its one-time setup cost —
-    // per-query numbers then measure the query, not filesystem metadata
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { t =>
-      // per-table try: one unreadable table must not abort the rest of
-      // the warm-up (that would silently re-attribute its setup cost to
-      // the first query touching the later tables)
-      try {
-        val p = new java.io.File(s"$sfDir/$t.parquet")
-        if (p.exists()) spark.read.parquet(p.getPath).count()
-      } catch { case _: Throwable => () }
-    }
-    try SparkEntry.queries.headOption.foreach(q => Bench.runFullPlan(q._2(spark, sfDir)))
-    catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
     // artifact path is per-SF-overridable (SPARK_GRAFT_BENCH_OUT): a
     // scale-slope run at a different SF must keep its own history file —
     // writing sf1 numbers over the sf0.1 history would both corrupt the
@@ -133,7 +94,7 @@ object Bench {
       // window: dead broadcasts/shuffles from query k must not be the
       // memory/disk pressure query k+1 is timed under (each query then
       // measures ITS OWN work — the methodology fix behind the r13
-      // in-run inflation; see the periodicGC comment on the session)
+      // in-run inflation; see the periodicGC comment in GraftSession.local)
       System.gc()
       attemptLog(name) = attemptLog.getOrElse(name, Nil) :+ t
       System.err.println(f"[bench] $name ${t}%.2f s")
@@ -201,16 +162,6 @@ object Bench {
       } else t)
     }
     loadSamples += loadavg()
-    // r14 formatting-only change (VERDICT_r13 item 2): print seconds at
-    // 4 decimals instead of the double's full 9+ digits. 0.1 ms is far
-    // below run-to-run noise, and the ~1.7 KB it shaves off the one-line
-    // JSON is the margin that kept BENCH_r12's tail capture from
-    // truncating mid-object (which cost r13 its entire round-over-round
-    // per-query comparison: n_common=0). Values, methodology, and the
-    // one-line stdout contract are unchanged.
-    // Locale.ROOT: a de_DE default locale would print 1,2345 and break
-    // the JSON
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.4f", v)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -255,4 +206,33 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** Warm up the session (codegen, shuffle machinery, the noop write
+    * path) and every table's scan path (parquet footers, file listing,
+    * page cache) so the first query touching a table doesn't absorb its
+    * one-time setup cost — per-query numbers then measure the query, not
+    * filesystem metadata. Bench, Profile and ProfileJobs all run it, so
+    * their numbers are comparable.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings").foreach { t =>
+      // per-table try: one unreadable table must not abort the rest of
+      // the warm-up (that would silently re-attribute its setup cost to
+      // the first query touching the later tables)
+      try {
+        val p = new java.io.File(s"$sfDir/$t.parquet")
+        if (p.exists()) spark.read.parquet(p.getPath).count()
+      } catch { case _: Throwable => () }
+    }
+    try SparkEntry.queries.headOption.foreach(q => runFullPlan(q._2(spark, sfDir)))
+    catch { case _: Throwable => () }
+  }
+
+  /** Seconds (and other JSON numbers) at 4 decimals: 0.1 ms is far below
+    * run-to-run noise, and the ~1.7 KB it shaves off the one-line JSON
+    * keeps a log-tail capture from truncating it mid-object. Locale.ROOT:
+    * a de_DE default locale would print 1,2345 and break the JSON.
+    */
+  def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.4f", v)
 }

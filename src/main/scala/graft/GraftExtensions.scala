@@ -14,9 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `minhash_md5(array<string>, salt)`,
   * `multi_pattern_counts(string, 'p1,p2,…')` and the
   * `topk_sketch(string, capacity)` aggregate in the function registry,
-  * so `spark.sql` queries and downstream tools can call them. Install
-  * either via `SparkSession.builder().withExtensions(new
-  * GraftExtensions)` or post-hoc with [[GraftFunctions.register]].
+  * so `spark.sql` queries and downstream tools can call them. Every
+  * [[GraftSession.local]] session installs it; a session built elsewhere
+  * can take it via `withExtensions(new GraftExtensions)` on its builder
+  * or post-hoc via [[GraftFunctions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder-side profiling harness: run one named query N times against a
   * scale-factor dir, print per-iteration wall time and (optionally) the
   * formatted physical plan. Usage:
@@ -14,22 +12,9 @@ object Profile {
     // [iters] and [explain] are independent optional args in any order
     val iters = args.drop(2).flatMap(_.toIntOption).headOption.getOrElse(3)
     val doExplain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val fn = SparkEntry.queries(name)
-    // session warmup on an unrelated cheap query — same methodology as
-    // the measured runs so the noop write path is warm too
-    try SparkEntry.queries.headOption.foreach(q => Bench.runFullPlan(q._2(spark, sfDir)))
-    catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
     if (doExplain) fn(spark, sfDir).explain("formatted")
     (1 to iters).foreach { i =>
       val t0 = System.nanoTime()

@@ -27,13 +27,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Scans {
 
-  /** Session conf key that turns [[fanOut]] into a pass-through — the
-    * A/B lever for scale sweeps (measure the same binary with and
-    * without the parallelism repair, no rebuild) and the escape hatch
-    * if a deployment's scan layout makes the probe undesirable.
-    */
-  val DisableConf = "spark.graft.fanout.disable"
-
   /** CONTRACT: call this on SCAN-LEVEL frames only (a bare table read,
     * optionally projected/filtered). `df.rdd.getNumPartitions` forces
     * physical planning, and under AQE on a POST-SHUFFLE frame it would
@@ -43,7 +36,6 @@ object Scans {
     * inside an operator; keep it that way.
     */
   def fanOut(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf.getOption(DisableConf).contains("true")) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     val cur =
       try df.rdd.getNumPartitions

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan capture for the optimization rounds: one JVM, many
   * queries, one `.explain("formatted")` text file each — the per-query
   * `graft.Explain` pays a full session spin-up per plan, which makes a
@@ -10,12 +8,12 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.ExplainAll <outDir> <suffix> <q1> [q2 ...]
   * Writes <outDir>/<query>_<suffix>.txt.
   *
-  * Session config matches Bench (shuffle partitions = SPARK_GRAFT_CPUS,
-  * AQE on) so the captured initial plans are the bench's plans. Note:
-  * operators built around eager lineage cuts (Checkpoints.cut) execute
-  * their iterative prefix during CONSTRUCTION; the captured text is the
-  * final plan segment above the last cut, which is exactly what the
-  * bench executes for the terminal action.
+  * The session is Bench's by construction (both call
+  * [[graft.GraftSession.local]]), so the captured initial plans are the
+  * bench's plans. Note: operators built around eager lineage cuts
+  * (Checkpoints.cut) execute their iterative prefix during CONSTRUCTION;
+  * the captured text is the final plan segment above the last cut, which
+  * is exactly what the bench executes for the terminal action.
   */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
@@ -23,25 +21,10 @@ object ExplainAll {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     sys.env.get("SPARK_GRAFT_AUTOSIZE")
       .foreach(v => spark.conf.set(graft.plans.Autosize.Key, v))
-    // SPARK_GRAFT_EXPLAIN_NOCUT=true: compose iterative operators into
-    // ONE plan (Checkpoints inspection knob) so a plan change BELOW the
-    // last lineage cut is visible in the captured text — inspection
-    // only, the bench never runs with cuts disabled
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN_NOCUT").contains("true"))
-      spark.conf.set(graft.plans.Checkpoints.DisableConf, "true")
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>
       try {

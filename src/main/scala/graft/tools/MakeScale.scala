@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builder-side SCALE-EVIDENCE generator: writes a synthetic N× blow-up
@@ -77,15 +77,7 @@ object MakeScale {
     require(!skew || copies.toLong * Stride < CliqueVecBase,
       s"skew mode: copies=$copies would push shifted ids (copies*Stride=" +
         s"${copies.toLong * Stride}) into the clique id range ($CliqueVecBase+)")
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     def src(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
 

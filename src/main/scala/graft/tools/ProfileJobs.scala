@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level time attribution for one query — the diagnosis step the
   * optimization guide's §1 loop needs when a query is MANY jobs (eager
@@ -16,17 +15,7 @@ object ProfileJobs {
     val sfDir = args(0)
     val name = args(1)
     val iters = args.drop(2).flatMap(_.toIntOption).headOption.getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     sys.env.get("SPARK_GRAFT_AUTOSIZE")
       .foreach(v => spark.conf.set(graft.plans.Autosize.Key, v))
 
@@ -46,9 +35,7 @@ object ProfileJobs {
     })
 
     val fn = graft.SparkEntry.queries(name)
-    try graft.SparkEntry.queries.headOption
-      .foreach(q => graft.Bench.runFullPlan(q._2(spark, sfDir)))
-    catch { case _: Throwable => () }
+    graft.Bench.warmUp(spark, sfDir)
     // optional contamination rig: run a list of OTHER queries first (the
     // bench-order prefix) so the profiled query sees the same in-process
     // state it sees mid-bench — the tool that separates "this query is

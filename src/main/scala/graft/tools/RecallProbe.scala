@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench.fmt
 
 /** Builder-side RECALL-EVIDENCE probe (r12 verdict item 2): the IVF
   * autosize law (kc = ⌈√n⌉, `Autosize.ivfCellsLaw`) is recall-proven on
@@ -20,17 +20,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_RECALL_OUT", "target/recall.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     // the probe measures the PRODUCTION config unless told otherwise
     spark.conf.set(graft.plans.Autosize.Key,
       sys.env.getOrElse("SPARK_GRAFT_AUTOSIZE", "true"))
@@ -41,7 +31,6 @@ object RecallProbe {
     def stats(vals: Seq[Double]): (Double, Double) =
       if (vals.isEmpty) (-1.0, -1.0)
       else (vals.sum / vals.size, vals.min)
-    def fmt(v: Double) = f"$v%.4f"
 
     // q267/q295 exactly as registered (derived kc, pinned nprobe=2)
     val perQuery = Seq("q267_ivf_recall", "q295_ivfpq_recall").map { name =>

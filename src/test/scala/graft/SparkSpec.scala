@@ -4,20 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite (lazy, reused across suites in the
-  * same JVM via getOrCreate).
+  * same JVM via getOrCreate). `local[4]` is explicit because the suites
+  * assume 4 cores while the test command may export `SPARK_GRAFT_CPUS`.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4, "graft-test")
 
   def sf(name: String) = s"/root/testdata/sf0.001"
 }

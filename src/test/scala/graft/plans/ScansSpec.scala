@@ -2,13 +2,12 @@ package graft.plans
 
 import graft.SparkSpec
 
-/** [[Scans.fanOut]] contract: repairs a below-parallelism scan, no-ops
-  * on an already-parallel frame, and the disable knob (the scale-sweep
-  * A/B lever) turns it into a pass-through.
+/** [[Scans.fanOut]] contract: repairs a below-parallelism scan and
+  * no-ops on an already-parallel frame.
   */
 class ScansSpec extends SparkSpec {
 
-  test("fanOut repairs a one-split scan to default parallelism; knob disables") {
+  test("fanOut repairs a one-split scan to default parallelism; no-op when parallel") {
     val docs = spark.read.parquet(s"${sf("")}/documents.parquet")
     assert(docs.rdd.getNumPartitions <
       spark.sparkContext.defaultParallelism, "fixture must be one-split")
@@ -17,8 +16,5 @@ class ScansSpec extends SparkSpec {
       spark.sparkContext.defaultParallelism)
     // already-parallel frames pass through untouched (the 100 TB layout)
     assert(Scans.fanOut(fanned) eq fanned)
-    spark.conf.set(Scans.DisableConf, "true")
-    try assert(Scans.fanOut(docs) eq docs)
-    finally spark.conf.unset(Scans.DisableConf)
   }
 }
