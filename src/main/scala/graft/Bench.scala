@@ -209,10 +209,11 @@ object Bench {
 
   /** Warm up the session (codegen, shuffle machinery, the noop write
     * path) and every table's scan path (parquet footers, file listing,
-    * page cache) so the first query touching a table doesn't absorb its
-    * one-time setup cost — per-query numbers then measure the query, not
-    * filesystem metadata. Bench, Profile and ProfileJobs all run it, so
-    * their numbers are comparable.
+    * page cache, and the table's [[Tables]] catalog entry, so its one
+    * schema inference lands here) so the first query touching a table
+    * doesn't absorb its one-time setup cost — per-query numbers then
+    * measure the query, not filesystem metadata. Bench, Profile and
+    * ProfileJobs all run it, so their numbers are comparable.
     */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -221,8 +222,8 @@ object Bench {
       // the warm-up (that would silently re-attribute its setup cost to
       // the first query touching the later tables)
       try {
-        val p = new java.io.File(s"$sfDir/$t.parquet")
-        if (p.exists()) spark.read.parquet(p.getPath).count()
+        val p = s"$sfDir/$t.parquet"
+        if (new java.io.File(p).exists()) Tables.read(spark, p).count()
       } catch { case _: Throwable => () }
     }
     try SparkEntry.queries.headOption.foreach(q => runFullPlan(q._2(spark, sfDir)))

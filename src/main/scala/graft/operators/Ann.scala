@@ -97,7 +97,7 @@ object Ann {
   def probeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                  centroids: Array[Array[Float]], query: Array[Float],
                  k: Int = 10, nprobe: Int = 2): DataFrame =
-    probeScored(spark.read.parquet(path), centroids, query, k, nprobe)
+    probeScored(graft.Tables.read(spark, path), centroids, query, k, nprobe)
 
   /** Shared probe tail: filter to the nprobe nearest cells, exact cosine
     * against the query, deterministic top-k — ONE implementation so the

@@ -1052,7 +1052,7 @@ object Dedup extends QueryModule {
   def sharedPpjoinTruth(spark: SparkSession, dir: String): DataFrame =
     truthLock.synchronized {
       val table = PpjoinTruthTable + "_" +
-        GraphOps.corpusFingerprint(spark, s"$dir/documents.parquet")
+        Tables.fingerprint(spark, s"$dir/documents.parquet")
       if (!truthBuilt.contains(table)) {
         graft.sources.Bucketing.writeBucketed(
           ppjoinExact(Tables(spark, dir).documents), table, "left_id", 8)

@@ -71,7 +71,7 @@ object GraphOps extends QueryModule {
     // dropping the first one under lazily-resolved DataFrames already
     // pointing at it. The listing is a one-time driver-side namenode
     // call per build — the same metadata the parquet scan itself lists.
-    val table = EdgeTable + "_" + corpusFingerprint(spark, s"$dir/lineitem.parquet")
+    val table = EdgeTable + "_" + Tables.fingerprint(spark, s"$dir/lineitem.parquet")
     if (!edgeBuilt.contains(table)) {
       graft.sources.Bucketing.writeBucketed(
         copurchaseEdges(Tables(spark, dir).lineitem), table, "u", 32)
@@ -112,7 +112,7 @@ object GraphOps extends QueryModule {
   def sharedWeightedEdges(spark: SparkSession, dir: String): DataFrame =
     edgeLock.synchronized {
       val table = WEdgeTable + "_" +
-        corpusFingerprint(spark, s"$dir/lineitem.parquet")
+        Tables.fingerprint(spark, s"$dir/lineitem.parquet")
       if (!edgeBuilt.contains(table)) {
         graft.sources.Bucketing.writeBucketed(
           weightedCopurchaseEdges(Tables(spark, dir).lineitem), table, "u", 32)
@@ -122,24 +122,6 @@ object GraphOps extends QueryModule {
     }
 
   val WEdgeTable = "graft_copurchase_wedges"
-
-  /** md5 over the recursive file listing (relative path, length,
-    * modification time) of `path` — the shared-artifact staleness key.
-    * Same content ⇒ same table name (reuse); any rewrite, even
-    * size-preserving, bumps mtime ⇒ new name ⇒ rebuild.
-    */
-  private[operators] def corpusFingerprint(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      lines += s"${st.getPath.toUri.getPath}|${st.getLen}|${st.getModificationTime}"
-    }
-    org.apache.commons.codec.digest.DigestUtils
-      .md5Hex(lines.sorted.mkString("\n")).substring(0, 12)
-  }
 
   /** Drop every shared bucketed artifact this object may have written
     * into the session's warehouse (edge tables and LPA label tables for
@@ -169,7 +151,7 @@ object GraphOps extends QueryModule {
   def sharedLpLabels(spark: SparkSession, dir: String, rounds: Int): DataFrame =
     edgeLock.synchronized {
       val table = LpLabelTable + "_" +
-        corpusFingerprint(spark, s"$dir/lineitem.parquet") + "_r" + rounds
+        Tables.fingerprint(spark, s"$dir/lineitem.parquet") + "_r" + rounds
       if (!edgeBuilt.contains(table)) {
         graft.sources.Bucketing.writeBucketed(
           lpLabels(sharedEdges(spark, dir), rounds, None), table, "node", 32)

@@ -79,7 +79,7 @@ object MakeScale {
         s"${copies.toLong * Stride}) into the clique id range ($CliqueVecBase+)")
     val spark = graft.GraftSession.local()
 
-    def src(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
+    def src(t: String): DataFrame = graft.Tables.read(spark, s"$srcDir/$t.parquet")
 
     /** Union `copies` transformed replicas; copy 0 is the original.
       * `post` reshapes the unioned frame (skew-mode hot keys/cliques).

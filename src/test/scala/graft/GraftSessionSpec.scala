@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-
 /** [[GraftSession.local]] contract: it is the only session builder in
   * `src/main`, so every entry point runs the engine's one configuration,
   * and the shared test session (built through it) carries that
@@ -11,18 +8,11 @@ import scala.jdk.CollectionConverters._
 class GraftSessionSpec extends SparkSpec {
 
   test("SparkSession.builder( appears in src/main only inside GraftSession.scala") {
-    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 50, s"walk found only ${files.size} sources")
-    def code(p: Path): String =
-      new String(Files.readAllBytes(p), "UTF-8")
-        .replaceAll("(?s)/\\*.*?\\*/", "")
-        .replaceAll("//[^\n]*", "")
     val builder = """SparkSession\.builder\(""".r
-    val builders = files.map(p => p -> builder.findAllMatchIn(code(p)).size)
+    val builders = mainSources.map { case (f, code) => f -> builder.findAllMatchIn(code).size }
       .filter(_._2 > 0)
-    assert(builders.map { case (p, n) => p.getFileName.toString -> n } ==
-      Seq("GraftSession.scala" -> 1), s"builders outside GraftSession: $builders")
+    assert(builders == Seq("GraftSession.scala" -> 1),
+      s"builders outside GraftSession: $builders")
   }
 
   test("shared test session: UTC, nanosAsLong, UI off, periodic GC at 2 min") {

@@ -1,13 +1,10 @@
 package graft.jobs
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
 import graft.extract.{CollectionDispatch, Envelope}
 import graft.sources.{FileCatalog, Readers}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -87,38 +84,6 @@ class IngestSliceSpec extends SparkSpec {
     val now = intercept[Exception](IngestSlice.run(spark, dir, "ds-gone"))
     val before = intercept[Exception](ReferenceSlice.run(spark, dir, "ds-gone"))
     assert(now.getClass == before.getClass && now.getMessage == before.getMessage)
-  }
-
-  /** Jobs fired by `body` on this thread (and the threads it spawns),
-    * counted by a listener keyed on a local property; a marker job
-    * afterwards drains the listener bus, which delivers events in order.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobs"
-    val tag = s"count-${System.nanoTime()}"
-    val counted = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => counted.incrementAndGet()
-          case Some(t) if t == s"$tag-end" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      body
-      sc.setLocalProperty(key, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      counted.get()
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("one request lists its upload once and builds its envelope once") {

@@ -20,11 +20,11 @@ class SharedArtifactsSpec extends SparkSpec {
   test("corpusFingerprint: unchanged dir => same key; rewrite => new key") {
     val dir = Files.createTempDirectory("graft_fp").toString
     writeLineitem(dir, Seq((1L, 10L), (1L, 11L)))
-    val f1 = GraphOps.corpusFingerprint(spark, s"$dir/lineitem.parquet")
-    val f2 = GraphOps.corpusFingerprint(spark, s"$dir/lineitem.parquet")
+    val f1 = graft.Tables.fingerprint(spark, s"$dir/lineitem.parquet")
+    val f2 = graft.Tables.fingerprint(spark, s"$dir/lineitem.parquet")
     assert(f1 == f2, "unchanged content must fingerprint identically")
     writeLineitem(dir, Seq((1L, 10L), (1L, 11L))) // same DATA, new write
-    val f3 = GraphOps.corpusFingerprint(spark, s"$dir/lineitem.parquet")
+    val f3 = graft.Tables.fingerprint(spark, s"$dir/lineitem.parquet")
     assert(f3 != f1, "an in-place rewrite must produce a new fingerprint")
   }
 

@@ -408,4 +408,13 @@ class AutosizeSpec extends SparkSpec {
       assert(s == defSem)
     }
   }
+
+  test("tableCount follows a rewrite under the same path") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_count").toString
+    (1 to 3).toDF("a").write.parquet(s"$d/t.parquet")
+    assert(Autosize.tableCount(spark, d, "t") == 3)
+    (1 to 5).toDF("a").write.mode("overwrite").parquet(s"$d/t.parquet")
+    assert(Autosize.tableCount(spark, d, "t") == 5)
+  }
 }
