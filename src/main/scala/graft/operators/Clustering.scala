@@ -110,11 +110,10 @@ object Clustering extends QueryModule {
     * column is the SemDeDup-era sanity check that geometric clusters
     * track semantic classes before trusting within-cluster dedup.
     */
-  def kmeansReport(embeddings: DataFrame, k: Int = 8, iters: Int = 2,
-                   checkpointDir: Option[String] = None): DataFrame = {
+  def kmeansReport(embeddings: DataFrame, k: Int = 8, iters: Int = 2): DataFrame = {
     // sizes and majority-label both read the assignment — cut once
     val a = graft.plans.Checkpoints.cut(
-      kmeansAssign(embeddings, k, iters), checkpointDir)
+      kmeansAssign(embeddings, k, iters))
     // inertia through decimal(38,0), REPORTED IN WHOLE squared units
     // (micro-units² div 10¹²): per-point dist reaches ~6e18 at 64 dims of
     // micro-unit diffs, so a plain BIGINT sum wraps within ONE cluster
@@ -141,13 +140,12 @@ object Clustering extends QueryModule {
     * squared-L2 (keep-first-by-id, the deterministic variant of "keep
     * one per duplicate ball"). Reports kept/dropped per cluster.
     */
-  def semDedupReport(embeddings: DataFrame, k: Int = 8, iters: Int = 2,
-                     checkpointDir: Option[String] = None): DataFrame = {
+  def semDedupReport(embeddings: DataFrame, k: Int = 8, iters: Int = 2): DataFrame = {
     // cut the lineage once: the self-join below reads the assignment
     // TWICE, and without the cut each side replays the full Lloyd
     // iteration (two assignment passes + centroid update) from the scan
     val a = graft.plans.Checkpoints.cut(
-      kmeansAssign(embeddings, k, iters).select("vec_id", "cid", "u"), checkpointDir)
+      kmeansAssign(embeddings, k, iters).select("vec_id", "cid", "u"))
     val dropped = a.as("a").join(a.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id") &&
         sqDist(col("a.u"), col("b.u")) <= DupThreshold)
@@ -177,11 +175,10 @@ object Clustering extends QueryModule {
     * All distances are the exact-integer [[sqDist]] kernel — no float
     * drift between rounds or engines.
     */
-  def kCenterCoreset(embeddings: DataFrame, k: Int = 8,
-                     checkpointDir: Option[String] = None): DataFrame = {
+  def kCenterCoreset(embeddings: DataFrame, k: Int = 8): DataFrame = {
     val spark = embeddings.sparkSession
     val vecs = graft.plans.Checkpoints.cut(
-      quantized(embeddings).select("vec_id", "u"), checkpointDir)
+      quantized(embeddings).select("vec_id", "u"))
     val seed = vecs.orderBy("vec_id").limit(1).collect()(0)
     var centers = Vector((1L, seed.getLong(0), 0L))
     var cur = vecs.select(col("vec_id"), col("u"),
@@ -216,15 +213,14 @@ object Clustering extends QueryModule {
     * codegen kernel, so recall is bit-deterministic.
     */
   def ivfRecall(embeddings: DataFrame, k: Int = 8, topK: Int = 10,
-                nprobe: Int = 2, nQueries: Int = 20,
-                checkpointDir: Option[String] = None): DataFrame = {
+                nprobe: Int = 2, nQueries: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vecs = graft.plans.Checkpoints.cut(quantized(embeddings), checkpointDir)
+    val vecs = graft.plans.Checkpoints.cut(quantized(embeddings))
     val c0 = vecs.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("u").as("cu"))
     val centroids = updateCentroids(assign(vecs, c0))
     val cells = graft.plans.Checkpoints.cut(
-      assign(vecs, centroids).select("vec_id", "cid", "u"), checkpointDir)
+      assign(vecs, centroids).select("vec_id", "cid", "u"))
     val qs = vecs.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("u").as("qu"))
     val probed = qs.crossJoin(broadcast(centroids))
@@ -272,16 +268,14 @@ object Clustering extends QueryModule {
     * re-rank posture). At 100 TB the codes table is ~m bytes/vector —
     * the point of PQ — and everything else is model-sized.
     */
-  def pqTopK(embeddings: DataFrame, m: Int = 4, k: Int = 4, topN: Int = 10,
-             checkpointDir: Option[String] = None): DataFrame = {
+  def pqTopK(embeddings: DataFrame, m: Int = 4, k: Int = 4, topN: Int = 10): DataFrame = {
     val vecs = quantized(embeddings).select("vec_id", "u")
     // (vec_id, j, su): subspace slices; reused by seeding + 2 assignment
     // passes + the query row — cut once
     val sub = graft.plans.Checkpoints.cut(
       vecs.select(col("vec_id"), explode(expr(s"sequence(0, ${m - 1})")).as("j"), col("u"))
         .select(col("vec_id"), col("j"),
-          expr(s"slice(u, j * (size(u) div $m) + 1, size(u) div $m)").as("su")),
-      checkpointDir)
+          expr(s"slice(u, j * (size(u) div $m) + 1, size(u) div $m)").as("su")))
 
     def assignSub(cb: DataFrame): DataFrame =
       sub.join(broadcast(cb), "j")
@@ -392,15 +386,14 @@ object Clustering extends QueryModule {
     * compression compose multiplicatively, which is the 100 TB plan.
     */
   def ivfPqRecall(embeddings: DataFrame, kc: Int = 8, m: Int = 8, kpq: Int = 16,
-                  topK: Int = 10, nprobe: Int = 2, nQueries: Int = 20,
-                  checkpointDir: Option[String] = None): DataFrame = {
+                  topK: Int = 10, nprobe: Int = 2, nQueries: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vecs = graft.plans.Checkpoints.cut(quantized(embeddings), checkpointDir)
+    val vecs = graft.plans.Checkpoints.cut(quantized(embeddings))
     val c0 = vecs.filter(col("vec_id") < kc)
       .select(col("vec_id").as("cid"), col("u").as("cu"))
     val centroids = updateCentroids(assign(vecs, c0))
     val cells = graft.plans.Checkpoints.cut(
-      assign(vecs, centroids).select("vec_id", "cid", "u"), checkpointDir)
+      assign(vecs, centroids).select("vec_id", "cid", "u"))
     val resid = cells
       .join(broadcast(centroids.select(col("cid"), col("cu").as("ccu"))), "cid")
       .select(col("vec_id"), col("cid"),
@@ -409,8 +402,7 @@ object Clustering extends QueryModule {
       resid.select(col("vec_id"), col("cid"),
           explode(expr(s"sequence(0, ${m - 1})")).as("j"), col("r"))
         .select(col("vec_id"), col("cid"), col("j"),
-          expr(s"slice(r, j * (size(r) div $m) + 1, size(r) div $m)").as("su")),
-      checkpointDir)
+          expr(s"slice(r, j * (size(r) div $m) + 1, size(r) div $m)").as("su")))
     def assignSub(cb: DataFrame): DataFrame =
       sub.join(broadcast(cb), "j")
         .select(col("vec_id"), col("cid"), col("j"), struct(
@@ -504,12 +496,10 @@ object Clustering extends QueryModule {
     * exact integer (quantized coords, integer d²) — no float drift in
     * any membership decision.
     */
-  def dbscanReport(embeddings: DataFrame, eps: Long = 9000L, minPts: Int = 4,
-                   checkpointDir: Option[String] = None): DataFrame = {
+  def dbscanReport(embeddings: DataFrame, eps: Long = 9000L, minPts: Int = 4): DataFrame = {
     val pts = graft.plans.Checkpoints.cut(
       quantized(embeddings).select(col("vec_id"),
-        col("u").getItem(0).as("x"), col("u").getItem(1).as("y")),
-      checkpointDir)
+        col("u").getItem(0).as("x"), col("u").getItem(1).as("y")))
     val home = pts.select(col("vec_id").as("b_id"), col("x").as("bx"),
       col("y").as("by"), expr(s"x div $eps").as("cx"), expr(s"y div $eps").as("cy"))
     val probe = pts
@@ -525,8 +515,7 @@ object Clustering extends QueryModule {
         .filter(col("a_id") =!= col("b_id") &&
           (col("ax") - col("bx")) * (col("ax") - col("bx")) +
           (col("ay") - col("by")) * (col("ay") - col("by")) <= lit(eps * eps))
-        .select(col("a_id"), col("b_id")),
-      checkpointDir)
+        .select(col("a_id"), col("b_id")))
     val core = pairs.groupBy(col("a_id").as("vec_id"))
       .agg((count(lit(1)) + 1).as("n_nb"))
       .filter(col("n_nb") >= minPts).select("vec_id")

@@ -788,19 +788,19 @@ object CorpusOps extends QueryModule {
         .select(col("source"), lower(col("text")).as("t"))
         .select(col("source"), explode(expr(
           "transform(sequence(1, length(t) - 2), i -> substring(t, i, 3))")).as("w"))
-        .distinct(), None)
+        .distinct())
     var remaining = st
     var picks = Seq.empty[DataFrame]
     for (r <- 1 to k) {
       val counts = remaining.groupBy("source").agg(count(lit(1)).as("new_tokens"))
       val pick = graft.plans.Checkpoints.cut(
-        counts.orderBy(col("new_tokens").desc, col("source")).limit(1), None)
+        counts.orderBy(col("new_tokens").desc, col("source")).limit(1))
       picks = picks :+ pick.select(lit(r).as("round"), col("source"), col("new_tokens"))
       val coveredTokens = remaining
         .join(pick.select("source"), Seq("source"), "left_semi").select("w")
       remaining = graft.plans.Checkpoints.cut(
         remaining.join(pick.select("source"), Seq("source"), "left_anti")
-          .join(coveredTokens, Seq("w"), "left_anti"), None)
+          .join(coveredTokens, Seq("w"), "left_anti"))
     }
     picks.reduce(_ unionAll _)
       .withColumn("cum_tokens", sum("new_tokens").over(

@@ -355,7 +355,7 @@ object Dedup extends QueryModule {
     // once and sorting the materialized rows halves the query
     // (measured ~3.7 → ~2.1 s at sf0.1); the cut is drained by
     // Checkpoints.release like every other pinned block
-    graft.plans.Checkpoints.cut(report, None).orderBy("left_id", "right_id")
+    graft.plans.Checkpoints.cut(report).orderBy("left_id", "right_id")
   }
 
   /** q99: INCREMENTAL dedup — the production ingest shape: a new batch
@@ -604,7 +604,7 @@ object Dedup extends QueryModule {
     val cap = graft.plans.Rounds.of(pairs.sparkSession, "cc", maxIters)
     val edges = pairs.toDF("src", "dst")
     val sym = graft.plans.Checkpoints.cut(
-      edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))), None)
+      edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
     // warm start at the 1-hop fixpoint candidate — min over self+neighbors
     // (every node appears as dst in the symmetric list), which already IS
     // the answer for pair-shaped components, the common near-dup case.
@@ -621,7 +621,7 @@ object Dedup extends QueryModule {
     // Checkpoints.release.
     var labels = graft.plans.Checkpoints.cut(
       sym.groupBy(col("dst").as("id")).agg(min(col("src")).as("m"))
-        .select(col("id"), least(col("id"), col("m")).as("label")), None)
+        .select(col("id"), least(col("id"), col("m")).as("label")))
     // CHANGE FRONTIER (r12): only a node whose label just improved can
     // improve a neighbor, so the edge-side neighbor-min join needs the
     // DELTA rows, not the full label map — the standard monotone-min
@@ -650,8 +650,7 @@ object Dedup extends QueryModule {
         labels.withColumnRenamed("label", "old")
           .join(fromNeighbors, Seq("id"), "left")
           .select(col("id"), col("old"),
-                  least(col("old"), coalesce(col("nlabel"), col("old"))).as("label")),
-        None)
+                  least(col("old"), coalesce(col("nlabel"), col("old"))).as("label")))
       // POINTER JUMP (path halving): label ← min(label, label(label)).
       // Neighbor-min alone moves a label one hop per round, so rounds =
       // component DIAMETER — q296's DBSCAN core graph at sf0.1 is an
@@ -666,8 +665,7 @@ object Dedup extends QueryModule {
       val next = graft.plans.Checkpoints.cut(
         prop.join(parents, prop("label") === parents("pid"), "left")
           .select(prop("id"), prop("old"),
-            least(prop("label"), coalesce(col("plabel"), prop("label"))).as("label")),
-        None)
+            least(prop("label"), coalesce(col("plabel"), prop("label"))).as("label")))
       // the frontier is a narrow FILTER of the just-materialized `next`
       // — leave it lazy instead of paying a third localCheckpoint job
       // per round: its two consumers (the count here, next round's
@@ -985,7 +983,7 @@ object Dedup extends QueryModule {
     // for spec fixtures
     val truth = truthPairs.map(_.select("left_id", "right_id")).getOrElse(
       graft.plans.Checkpoints.cut(
-        ppjoinExact(documents).select("left_id", "right_id"), None))
+        ppjoinExact(documents).select("left_id", "right_id")))
     val nDocs = documents.agg(count(lit(1)).as("nd"))
     // ONE signature pass: the b-band salts are a prefix of the max-band
     // salts, so every config's candidate set is a band_idx < b filter of
@@ -998,7 +996,7 @@ object Dedup extends QueryModule {
           explode(array((0 until maxBands).map(j =>
             struct(lit(j).as("band_idx"), col(s"mh$j").as("band_key"))): _*)).as("b"))
         .select(col("doc_id"), col("b.band_idx"), col("b.band_key"))
-        .filter(col("band_key").isNotNull), None)
+        .filter(col("band_key").isNotNull))
     val rows = bandCounts.map { b =>
       val cand = graft.plans.Checkpoints.cut(
         stacked.filter(col("band_idx") < b)
@@ -1007,7 +1005,7 @@ object Dedup extends QueryModule {
           .filter(size(col("ids")) > 1)
           .select(explode(expr(PairExpansionExpr)).as("pair"))
           .select(col("pair.l").as("left_id"), col("pair.r").as("right_id"))
-          .distinct(), None)
+          .distinct())
       val caught = cand.join(truth, Seq("left_id", "right_id"), "left_semi")
       cand.agg(count(lit(1)).as("n_candidates"))
         .crossJoin(truth.agg(count(lit(1)).as("n_true")))
@@ -1034,41 +1032,25 @@ object Dedup extends QueryModule {
   }
 
   val PpjoinTruthTable = "graft_ppjoin_truth"
-  private val truthLock = new Object
-  private var truthBuilt = Set.empty[String]
 
-  /** The exact τ=0.8 PPJoin pair set as a shared bucketed artifact,
-    * the [[GraphOps.sharedEdges]]/[[GraphOps.sharedLpLabels]] posture
-    * applied to the dedup ladder (r14 optimization, VERDICT item 5):
-    * q216 REPORTS this frame and q326 CALIBRATES against it, and both
-    * used to pay the full prefix-filtered verify (~5 s each at sf0.1 —
-    * the two largest non-graph bench entries). Built once per
-    * (process, corpus CONTENT) keyed on the documents.parquet listing
-    * fingerprint, so a regenerated corpus rebuilds and an unchanged one
-    * reuses; on a cluster the truth set is written once per corpus
-    * version, which is also how an entity-resolution rollout actually
-    * maintains its ground-truth pairs.
+  /** The exact τ=0.8 PPJoin pair set as a shared bucketed artifact
+    * ([[graft.sources.Bucketing.shared]], like
+    * [[GraphOps.sharedEdges]]/[[GraphOps.sharedLpLabels]]) for the dedup
+    * ladder (r14 optimization, VERDICT item 5): q216 REPORTS this frame
+    * and q326 CALIBRATES against it, and both used to pay the full
+    * prefix-filtered verify (~5 s each at sf0.1 — the two largest
+    * non-graph bench entries). Built once per corpus CONTENT, keyed on
+    * the documents.parquet listing fingerprint, so a regenerated corpus
+    * rebuilds and an unchanged one reuses; on a cluster the truth set is
+    * written once per corpus version, which is also how an
+    * entity-resolution rollout actually maintains its ground-truth pairs.
     */
   def sharedPpjoinTruth(spark: SparkSession, dir: String): DataFrame =
-    truthLock.synchronized {
-      val table = PpjoinTruthTable + "_" +
-        Tables.fingerprint(spark, s"$dir/documents.parquet")
-      if (!truthBuilt.contains(table)) {
-        graft.sources.Bucketing.writeBucketed(
-          ppjoinExact(Tables(spark, dir).documents), table, "left_id", 8)
-        truthBuilt += table
-      }
-      spark.table(table)
+    graft.sources.Bucketing.shared(spark,
+        PpjoinTruthTable + "_" + Tables.fingerprint(spark, s"$dir/documents.parquet"),
+        "left_id", 8) {
+      ppjoinExact(Tables(spark, dir).documents)
     }
-
-  /** Warehouse cleanup for [[sharedPpjoinTruth]], mirroring
-    * [[GraphOps.dropSharedArtifacts]]; consumers rebuild on next use. */
-  def dropSharedArtifacts(spark: SparkSession): Unit = truthLock.synchronized {
-    spark.sessionState.catalog.listTables("default").map(_.table)
-      .filter(_.startsWith(PpjoinTruthTable))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    truthBuilt = Set.empty[String]
-  }
 
   def ppjoinExact(documents: DataFrame): DataFrame = {
     val sh = documents.select(col("doc_id"),
@@ -1150,87 +1132,6 @@ object Dedup extends QueryModule {
       .orderBy("source")
   }
 
-  /** Connected components by the alternating large-star/small-star
-    * algorithm (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — O(log n) rounds on ANY graph shape, vs min-label
-    * propagation's O(diameter). [[connectedComponents]] stays the
-    * default for near-dup clustering (tiny diameters, its warm start
-    * converges in one check); this is the general-graph path for long
-    * chains/adversarial shapes.
-    *
-    *  - large-star: per node u, link every strictly-larger neighbor to
-    *    m(u) = min(Γ(u) ∪ u) — done as one window-min over the
-    *    symmetric edge list, no join;
-    *  - small-star: per node u, link every ≤ neighbor and u itself to
-    *    m(u) over the down-oriented edges;
-    *  - converged when the directed edge multiset is stable, checked by
-    *    (count, xor-of-row-hashes) in the same aggregation — one action
-    *    per round, no extra `except` job.
-    *
-    * Output contract matches [[connectedComponents]]: (id, label) per
-    * node appearing in an edge, label = component min.
-    */
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 25,
-                              checkpointDir: Option[String] = None): DataFrame = {
-    // same `spark.graft.rounds.cc` cap knob as [[connectedComponents]]
-    val cap = graft.plans.Rounds.of(pairs.sparkSession, "cc", maxIters)
-    // m(u) via groupBy + join-back rather than an unbounded window:
-    // min() gets map-side partial aggregation (a 10^8-degree hub
-    // combines locally instead of sorting its whole neighbor list in
-    // one window task), and the join is AQE-skew-splittable where a
-    // window partition is not
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u")
-        .agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      sym.join(mins, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val down = e.select(greatest(col("u"), col("v")).as("u"),
-                          least(col("u"), col("v")).as("v"))
-      val mins = down.groupBy("u").agg(min(col("v")).as("m"))
-      val withM = down.join(mins, "u")
-      withM.select(col("v").as("u"), col("m").as("v"))
-        .unionByName(mins.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-    var edges = pairs.toDF("u", "v").filter(col("u") =!= col("v")).distinct().cache()
-    var signature = (-1L, 0L)
-    var i = 0
-    var converged = false
-    while (!converged && i < cap) {
-      // eager localCheckpoint BOTH materializes the round and truncates
-      // lineage — without it each round's plan embeds the previous
-      // round's twice (the star expansions reference their input twice),
-      // an exponential tree that kills the planner long before data
-      // does. Iterative graph algorithms checkpoint per round for
-      // exactly this reason; the payload is only the shrinking edge
-      // list, not corpus-sized state. checkpointDir upgrades the cut to
-      // a fault-tolerant store for long cluster runs (Checkpoints.cut).
-      val next = graft.plans.Checkpoints.cut(smallStar(largeStar(edges)), checkpointDir)
-      // stability check folded into one aggregation — a changed round
-      // can't collide on BOTH count and xor-of-hashes (bit_xor, not sum:
-      // summing full-range hashes overflows under ANSI)
-      val row = next.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      val sig = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-      edges.unpersist()
-      edges = next
-      if (sig == signature) converged = true else { signature = sig; i += 1 }
-    }
-    if (!converged) System.err.println(
-      s"[graft] connectedComponentsStar stopped at maxIters=$cap before convergence")
-    // fixpoint edges form stars child → component-min; the roots label
-    // themselves
-    edges.select(col("u").as("id"), col("v").as("label"))
-      .unionByName(edges.select(col("v").as("id"), col("v").as("label")))
-      .distinct()
-  }
-
   /** q286: DATA-DRIVEN LSH band planner — pick the (bands, rows) split
     * of a 64-hash signature that minimizes expected miss/false-candidate
     * cost ON THIS CORPUS, instead of hardcoding (b, r) per folklore.
@@ -1258,8 +1159,7 @@ object Dedup extends QueryModule {
     val sel = graft.plans.Checkpoints.cut(documents
       .filter(pmod(col("doc_id"), lit(sampleMod)) === 0)
       .select(col("doc_id"),
-        graft.functions.MinHashMd5.textMinhashMd5Multi(col("text"), salts).as("sig")),
-      None)
+        graft.functions.MinHashMd5.textMinhashMd5Multi(col("text"), salts).as("sig")))
     val pairs = sel.as("a").join(broadcast(sel.as("b")),
         col("a.doc_id") < col("b.doc_id"))
       .select(graft.functions.SigMatchCount

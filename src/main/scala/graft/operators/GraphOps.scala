@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
+import graft.sources.Bucketing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,39 +51,35 @@ object GraphOps extends QueryModule {
       .select(explode(expr(Dedup.pairExpansionExpr("ids"))).as("pair"))
       .select(col("pair.l").as("u"), col("pair.r").as("v")).distinct()
 
-  /** The co-purchase edge table, materialized ONCE per (process,
-    * corpus CONTENT) as a bucketed managed table (key = u) and shared by every
-    * graph query: 10+ `SparkEntry.queries` entries consume the same
-    * edge set, and each used to re-run the order-grouping build (~4 s
-    * at sf0.1) from scratch. Bucketing (vs a plain cache) mirrors the
-    * q205 dedup-index posture — the table survives as a real artifact,
-    * a join/groupBy on `u` needs no Exchange on the edge side, and on
-    * a cluster the write happens once per corpus version, not once per
-    * query. Consumers take the edge frame as a parameter, so specs
-    * still pass small computed fixtures (recomputing a fixture is
-    * free; the table path is the bench/production shape).
+  /** The co-purchase edge table, materialized ONCE per corpus content as
+    * a bucketed managed table (key = u, [[graft.sources.Bucketing.shared]])
+    * and shared by every graph query: 10+ `SparkEntry.queries` entries
+    * consume the same edge set, and each used to re-run the
+    * order-grouping build (~4 s at sf0.1) from scratch. Bucketing (vs a
+    * plain cache) mirrors the q205 dedup index — the table survives as a
+    * real artifact, a join/groupBy on `u` needs no Exchange on the edge
+    * side, and on a cluster the write happens once per corpus version,
+    * not once per query. Consumers take the edge frame as a parameter,
+    * so specs still pass small computed fixtures (recomputing a fixture
+    * is free; the table path is the bench/production shape).
+    *
+    * The table name carries a CONTENT fingerprint of the source parquet
+    * (file paths + sizes + mtimes), not the dir string: a corpus
+    * regenerated in place under the same path gets a NEW table instead
+    * of silently serving stale edges to all 12 graph consumers, and a
+    * second dir in the same process builds its OWN table instead of
+    * dropping the first one under lazily-resolved DataFrames already
+    * pointing at it.
     */
-  def sharedEdges(spark: SparkSession, dir: String): DataFrame = edgeLock.synchronized {
-    // table name carries a CONTENT fingerprint of the source parquet
-    // (file paths + sizes + mtimes), not the dir string: a corpus
-    // regenerated in place under the same path gets a NEW table instead
-    // of silently serving stale edges to all 12 graph consumers, and a
-    // second dir in the same process builds its OWN table instead of
-    // dropping the first one under lazily-resolved DataFrames already
-    // pointing at it. The listing is a one-time driver-side namenode
-    // call per build — the same metadata the parquet scan itself lists.
-    val table = EdgeTable + "_" + Tables.fingerprint(spark, s"$dir/lineitem.parquet")
-    if (!edgeBuilt.contains(table)) {
-      graft.sources.Bucketing.writeBucketed(
-        copurchaseEdges(Tables(spark, dir).lineitem), table, "u", 32)
-      edgeBuilt += table
+  def sharedEdges(spark: SparkSession, dir: String): DataFrame =
+    Bucketing.shared(spark, EdgeTable + "_" + lineitemVersion(spark, dir), "u", 32) {
+      copurchaseEdges(Tables(spark, dir).lineitem)
     }
-    spark.table(table)
-  }
 
   val EdgeTable = "graft_copurchase_edges"
-  private val edgeLock = new Object
-  private var edgeBuilt = Set.empty[String]
+
+  private def lineitemVersion(spark: SparkSession, dir: String): String =
+    Tables.fingerprint(spark, s"$dir/lineitem.parquet")
 
   /** WEIGHTED co-purchase edges (u < v, cnt = number of orders that
     * contain both parts) via the same bucket trick as
@@ -100,64 +97,35 @@ object GraphOps extends QueryModule {
       .select(col("pair.l").as("u"), col("pair.r").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("cnt"))
 
-  /** The weighted edge table as a shared bucketed artifact, same
-    * posture and staleness key as [[sharedEdges]] — q224's co-occurrence
-    * build (distinct + order-key self-join + pair aggregate, ~4 s at
-    * sf0.1) was the one graph input still recomputed from lineitem on
-    * every run because [[sharedEdges]] lost the multiplicity the edge
-    * weights need. A second table carrying `cnt` closes that gap; on a
-    * cluster it is written once per corpus version next to the
-    * unweighted one.
+  /** The weighted edge table as a shared bucketed artifact, keyed like
+    * [[sharedEdges]] — q224's co-occurrence build (distinct + order-key
+    * self-join + pair aggregate, ~4 s at sf0.1) was the one graph input
+    * still recomputed from lineitem on every run because [[sharedEdges]]
+    * lost the multiplicity the edge weights need. A second table
+    * carrying `cnt` closes that gap; on a cluster it is written once per
+    * corpus version next to the unweighted one.
     */
   def sharedWeightedEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeLock.synchronized {
-      val table = WEdgeTable + "_" +
-        Tables.fingerprint(spark, s"$dir/lineitem.parquet")
-      if (!edgeBuilt.contains(table)) {
-        graft.sources.Bucketing.writeBucketed(
-          weightedCopurchaseEdges(Tables(spark, dir).lineitem), table, "u", 32)
-        edgeBuilt += table
-      }
-      spark.table(table)
+    Bucketing.shared(spark, WEdgeTable + "_" + lineitemVersion(spark, dir), "u", 32) {
+      weightedCopurchaseEdges(Tables(spark, dir).lineitem)
     }
 
   val WEdgeTable = "graft_copurchase_wedges"
 
-  /** Drop every shared bucketed artifact this object may have written
-    * into the session's warehouse (edge tables and LPA label tables for
-    * ALL fingerprints, not just this process's) — the cleanup hook that
-    * keeps warehouse dirs from accumulating stale tables across corpus
-    * versions. Safe to call anytime; consumers rebuild on next use.
-    */
-  def dropSharedArtifacts(spark: SparkSession): Unit = edgeLock.synchronized {
-    val names = spark.sessionState.catalog.listTables("default")
-      .map(_.table)
-      .filter(t => t.startsWith(EdgeTable) || t.startsWith(WEdgeTable) ||
-        t.startsWith(LpLabelTable))
-    names.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    edgeBuilt = Set.empty[String]
-  }
-
   val LpLabelTable = "graft_lpa_labels"
 
-  /** The q232 label-propagation COMMUNITY ASSIGNMENT as a session
-    * artifact, same posture as [[sharedEdges]]: q232 reports its
-    * histogram and q314 scores its modularity — both used to re-run
-    * the LPA rounds from scratch. Built once per (process, corpus
-    * content, round count) as a bucketed table keyed on the node id; the round
-    * count is part of the table name so the `spark.graft.rounds.lpa`
-    * knob still produces a distinct, correct artifact.
+  /** The q232 label-propagation COMMUNITY ASSIGNMENT as a shared bucketed
+    * artifact keyed on the node id, built from [[sharedEdges]]: q232
+    * reports its histogram and q314 scores its modularity — both used to
+    * re-run the LPA rounds from scratch. Built once per (corpus content,
+    * round count); the round count is part of the table name so the
+    * `spark.graft.rounds.lpa` knob still produces a distinct, correct
+    * artifact.
     */
   def sharedLpLabels(spark: SparkSession, dir: String, rounds: Int): DataFrame =
-    edgeLock.synchronized {
-      val table = LpLabelTable + "_" +
-        Tables.fingerprint(spark, s"$dir/lineitem.parquet") + "_r" + rounds
-      if (!edgeBuilt.contains(table)) {
-        graft.sources.Bucketing.writeBucketed(
-          lpLabels(sharedEdges(spark, dir), rounds, None), table, "node", 32)
-        edgeBuilt += table
-      }
-      spark.table(table)
+    Bucketing.shared(spark,
+        LpLabelTable + "_" + lineitemVersion(spark, dir) + "_r" + rounds, "node", 32) {
+      lpLabels(sharedEdges(spark, dir), rounds)
     }
 
   /** q142: triangle census + global clustering coefficient.
@@ -168,9 +136,7 @@ object GraphOps extends QueryModule {
     * the two endpoints' sorted out-neighbor lists map-side — the wedge
     * stream never materializes (see the strategy note in the body).
     */
-  def triangleCensus(und: DataFrame,
-                     checkpointDir: Option[String] = None,
-                     broadcastEdgeLimit: Long = 20000000L): DataFrame = {
+  def triangleCensus(und: DataFrame, broadcastEdgeLimit: Long = 20000000L): DataFrame = {
     // edges arrive materialized (the [[sharedEdges]] bucketed table in
     // production; a small computed frame in specs) — re-reading them is
     // a bounded scan, and skipping the cut keeps the table's bucketed
@@ -186,7 +152,7 @@ object GraphOps extends QueryModule {
         when(uFirst, col("u")).otherwise(col("v")).as("src"),
         when(uFirst, col("v")).otherwise(col("u")).as("dst"),
         when(uFirst, col("dv")).otherwise(col("du")).as("dd"))
-    val orientedCut = graft.plans.Checkpoints.cut(oriented, checkpointDir)
+    val orientedCut = graft.plans.Checkpoints.cut(oriented)
     // edge count for the strategy switch AND the n_edges report column —
     // taken from the already-materialized orientedCut (same cardinality
     // as the input: one oriented row per undirected edge), so a caller
@@ -242,8 +208,7 @@ object GraphOps extends QueryModule {
     * Graphs past the broadcast limit would swap in q142's wedge-join
     * form — the credit union is identical from the (a, b, c) stream.
     */
-  def clusteringCoefficients(und: DataFrame, topN: Int = 20,
-                             checkpointDir: Option[String] = None): DataFrame = {
+  def clusteringCoefficients(und: DataFrame, topN: Int = 20): DataFrame = {
     val edges = und
     val deg = edges.select(col("u").as("n")).unionAll(edges.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -253,7 +218,7 @@ object GraphOps extends QueryModule {
     val uFirst = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
     val oriented = graft.plans.Checkpoints.cut(withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("src"),
-      when(uFirst, col("v")).otherwise(col("u")).as("dst")), checkpointDir)
+      when(uFirst, col("v")).otherwise(col("u")).as("dst")))
     val adj = oriented.groupBy("src")
       .agg(sort_array(collect_list(col("dst"))).as("nb"))
     val emptyNb = expr("cast(array() as array<bigint>)")
@@ -301,8 +266,7 @@ object GraphOps extends QueryModule {
     * shuffle carries (int, long) pairs. Rank mass rounds DOWN at each
     * div, which is exactly reproducible (and what the oracle unrolls).
     */
-  def copurchaseRank(und: DataFrame, iters: Int = 3, topN: Int = 10,
-                     checkpointDir: Option[String] = None): DataFrame = {
+  def copurchaseRank(und: DataFrame, iters: Int = 3, topN: Int = 10): DataFrame = {
     // edges pre-partitioned on the source key and checkpointed ONCE:
     // every iteration's rank join is then co-partitioned (ranks come out
     // of the previous groupBy("node") already hash-partitioned), so the
@@ -315,14 +279,14 @@ object GraphOps extends QueryModule {
     val edges = graft.plans.Checkpoints.cut(
       und.select(col("u").as("s"), col("v").as("dd"))
         .unionAll(und.select(col("v").as("s"), col("u").as("dd")))
-        .repartition(col("s")), checkpointDir)
+        .repartition(col("s")))
     val deg = edges.groupBy("s").agg(count(lit(1)).as("deg"))
     val n = deg.agg(count(lit(1)).as("nn"))
     val meta = deg.crossJoin(broadcast(n))
       .select(col("s").as("node"), col("deg"),
         expr("150000000000 div nn").as("base"),
         expr("1000000000000 div nn").as("rank"))
-    val metaCut = graft.plans.Checkpoints.cut(meta, checkpointDir)
+    val metaCut = graft.plans.Checkpoints.cut(meta)
     var ranks = metaCut.select("node", "rank")
     for (_ <- 1 to iters) {
       val inc = edges
@@ -391,9 +355,8 @@ object GraphOps extends QueryModule {
     * ([[graft.plans.Checkpoints]]) so round r doesn't replan rounds
     * 1..r−1.
     */
-  def kCorePeel(und: DataFrame, k: Int = 3, rounds: Int = 4,
-                checkpointDir: Option[String] = None): DataFrame = {
-    var edges = graft.plans.Checkpoints.cut(und, checkpointDir)
+  def kCorePeel(und: DataFrame, k: Int = 3, rounds: Int = 4): DataFrame = {
+    var edges = graft.plans.Checkpoints.cut(und)
     // Early exit at the fixpoint: a round that removes no edge makes
     // every later round a no-op (peeling is monotone), so re-running
     // them would just re-materialize identical frames. Result-identical
@@ -408,8 +371,7 @@ object GraphOps extends QueryModule {
       val keep = deg.filter(col("d") >= k).select("n")
       edges = graft.plans.Checkpoints.cut(
         edges.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-             .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi"),
-        checkpointDir)
+             .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi"))
       val c = edges.count()
       stable = c == prevEdges
       prevEdges = c
@@ -440,7 +402,6 @@ object GraphOps extends QueryModule {
     * diameter in a few rounds).
     */
   def cheapestPaths(li: DataFrame, hops: Int = 3, topN: Int = 20,
-                    checkpointDir: Option[String] = None,
                     weightedEdges: Option[DataFrame] = None): DataFrame = {
     // weightedEdges (u, v, cnt), when supplied, is the shared bucketed
     // [[sharedWeightedEdges]] artifact — identical by construction to
@@ -457,7 +418,7 @@ object GraphOps extends QueryModule {
     }.withColumn("w", expr("1000000 div cnt"))
     val sym = graft.plans.Checkpoints.cut(
       co.select(col("u").as("s"), col("v").as("t"), col("w"))
-        .unionAll(co.select(col("v").as("s"), col("u").as("t"), col("w"))), checkpointDir)
+        .unionAll(co.select(col("v").as("s"), col("u").as("t"), col("w"))))
     var dist = li.agg(min("l_partkey").as("node")).withColumn("dist", lit(0L))
       .select("node", "dist")
     for (_ <- 1 to hops) {
@@ -465,7 +426,7 @@ object GraphOps extends QueryModule {
         .select(col("t").as("node"), (col("dist") + col("w")).as("dist"))
       dist = graft.plans.Checkpoints.cut(
         dist.select("node", "dist").unionAll(relaxed)
-          .groupBy("node").agg(min("dist").as("dist")), checkpointDir)
+          .groupBy("node").agg(min("dist").as("dist")))
     }
     dist.orderBy(col("dist"), col("node")).limit(topN)
   }
@@ -483,12 +444,11 @@ object GraphOps extends QueryModule {
     * only nodes within r hops of the seed, so a 3-round PPR on a
     * 100 TB graph is frontier-sized work, not graph-sized.
     */
-  def personalizedRank(und: DataFrame, iters: Int = 3, topN: Int = 10,
-                       checkpointDir: Option[String] = None): DataFrame = {
+  def personalizedRank(und: DataFrame, iters: Int = 3, topN: Int = 10): DataFrame = {
     val edges = graft.plans.Checkpoints.cut(
       und.select(col("u").as("s"), col("v").as("dd"))
         .unionAll(und.select(col("v").as("s"), col("u").as("dd")))
-        .repartition(col("s")), checkpointDir)
+        .repartition(col("s")))
     val deg = edges.groupBy("s").agg(count(lit(1)).as("deg"))
     val seed = edges.agg(min("s").as("node")).withColumn("rank", lit(1000000000000L))
     var ranks = seed.select("node", "rank")
@@ -527,9 +487,8 @@ object GraphOps extends QueryModule {
     * edge-sized, and the argmax is `min(struct(-c, lbl))`, a map-side
     * partial agg, not a window sort.
     */
-  def labelPropagation(und: DataFrame, rounds: Int = 2,
-                       checkpointDir: Option[String] = None): DataFrame =
-    labelHistogram(lpLabels(und, rounds, checkpointDir))
+  def labelPropagation(und: DataFrame, rounds: Int = 2): DataFrame =
+    labelHistogram(lpLabels(und, rounds))
 
   /** The q232 report over an already-computed (node, lbl) assignment —
     * the entry the shared labels artifact feeds. */
@@ -542,12 +501,11 @@ object GraphOps extends QueryModule {
   /** The q232 synchronous LPA rounds, factored out so q314 can score the
     * SAME community assignment — returns the (node, lbl) frame.
     */
-  def lpLabels(und: DataFrame, rounds: Int,
-               checkpointDir: Option[String]): DataFrame = {
+  def lpLabels(und: DataFrame, rounds: Int): DataFrame = {
     val edges = graft.plans.Checkpoints.cut(
       und.select(col("u").as("s"), col("v").as("dd"))
         .unionAll(und.select(col("v").as("s"), col("u").as("dd")))
-        .repartition(col("s")), checkpointDir)
+        .repartition(col("s")))
     var labels = edges.select(col("s").as("node")).distinct()
       .withColumn("lbl", col("node"))
     for (_ <- 1 to rounds) {
@@ -557,7 +515,7 @@ object GraphOps extends QueryModule {
       labels = graft.plans.Checkpoints.cut(
         freq.groupBy("node")
           .agg(min(struct(col("c") * -1, col("lbl"))).as("m"))
-          .select(col("node"), col("m.lbl").as("lbl")), checkpointDir)
+          .select(col("node"), col("m.lbl").as("lbl")))
     }
     labels
   }
@@ -660,19 +618,18 @@ object GraphOps extends QueryModule {
     * estimate is integer register sums + ONE double division, no
     * order-dependent float accumulation.
     */
-  def hyperBall(und: DataFrame, rounds: Int = 2, reportN: Int = 6,
-                checkpointDir: Option[String] = None): DataFrame = {
+  def hyperBall(und: DataFrame, rounds: Int = 2, reportN: Int = 6): DataFrame = {
     // every merge round re-reads the symmetric edge stream — pin it once
     // (measured ~10% at sf0.1 vs re-scanning the bucketed table per round)
     val sym = graft.plans.Checkpoints.cut(
       und.select(col("u").as("s"), col("v").as("t"))
-        .unionAll(und.select(col("v").as("s"), col("u").as("t"))), checkpointDir)
+        .unionAll(und.select(col("v").as("s"), col("u").as("t"))))
     val deg = sym.groupBy("s").agg(count(lit(1)).as("degree"))
     // reportN rows consumed by the ball seed and every round's output
     // join — cut so the degree aggregate + top-k run once, not 4×
     val report = graft.plans.Checkpoints.cut(
       deg.orderBy(col("degree").desc, col("s")).limit(reportN)
-        .select(col("s").as("part"), col("degree")), checkpointDir)
+        .select(col("s").as("part"), col("degree")))
     // WIDE register layout: one row per node, 16 rank columns, 0 = empty
     // bucket (real ranks are 1..57, so 0 is free as the empty marker and
     // its 2^57 estimator term coincides with the empty-bucket term).
@@ -717,7 +674,7 @@ object GraphOps extends QueryModule {
     // distinct+count they replace; the trade would only flip where the
     // cumulative ball dwarfs the frontier (high rounds / dense balls),
     // which the oracle-pinned default never reaches. Reverted.
-    var regs = graft.plans.Checkpoints.cut(b0, checkpointDir)
+    var regs = graft.plans.Checkpoints.cut(b0)
     var ball = report.select(col("part"), col("part").as("member"))
     var out = report.join(estimate(regs), col("part") === col("n"))
       .select(lit(0).as("round"), col("part"), col("degree"),
@@ -735,12 +692,11 @@ object GraphOps extends QueryModule {
             .select(col("s").as("n") +: regIdx.map(i => col(s"r$i")): _*))
           .groupBy("n")
           .agg(max(col("r0")).as("r0"),
-            regIdx.drop(1).map(i => max(col(s"r$i")).as(s"r$i")): _*),
-        checkpointDir)
+            regIdx.drop(1).map(i => max(col(s"r$i")).as(s"r$i")): _*))
       ball = graft.plans.Checkpoints.cut(
         ball.unionAll(
           sym.join(broadcast(ball), ball("member") === sym("s"))
-            .select(col("part"), col("t").as("member"))).distinct(), checkpointDir)
+            .select(col("part"), col("t").as("member"))).distinct())
       out = out.unionAll(
         report.join(estimate(regs), col("part") === col("n"))
           .join(ball.groupBy("part").agg(count(lit(1)).as("exact_ball")), "part")

@@ -152,20 +152,21 @@ object Modeling extends QueryModule {
     * scans round k-1's blocks instead of replaying all k-1 folds from
     * the corpus (lineage would otherwise grow linearly in rounds, and
     * the per-round argmax collect would recompute the whole chain);
-    * `checkpointDir = Some(path)` switches to reliable checkpoints for
-    * long multi-hundred-round training runs on a real cluster.
+    * the session conf `spark.graft.checkpointDir` switches every cut to
+    * reliable checkpoints for long multi-hundred-round training runs on
+    * a real cluster.
     */
   /** Shared BPE training loop: returns the final vocab-collapsed word
     * state (word, t: token array, freq) AND the ordered merge list.
     * The word column rides along untouched so the encode report can map
     * corpus words to their tokenization without replaying the fold.
     */
-  private[operators] def bpeTrain(documents: DataFrame, rounds: Int,
-      checkpointDir: Option[String]): (DataFrame, Seq[(Int, String, String, String, Long)]) = {
+  private[operators] def bpeTrain(documents: DataFrame, rounds: Int)
+      : (DataFrame, Seq[(Int, String, String, String, Long)]) = {
     var words = graft.plans.Checkpoints.cut(documents
       .select(explode(split(lower(col("text")), " ")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(col("word"), split(col("word"), "").as("t"), col("freq")), checkpointDir)
+      .select(col("word"), split(col("word"), "").as("t"), col("freq")))
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     for (round <- 1 to rounds) {
       val best = words
@@ -186,17 +187,16 @@ object Modeling extends QueryModule {
               |  IF(size(acc) > 0 AND element_at(acc, -1) = lt AND x = rt,
               |     concat(slice(acc, 1, size(acc) - 1), array(mt)),
               |     concat(acc, array(x))))""".stripMargin))
-          .drop("lt", "rt", "mt"), checkpointDir)
+          .drop("lt", "rt", "mt"))
       }
     }
     (words, out.toSeq)
   }
 
-  def bpeMerges(documents: DataFrame, rounds: Int = 8,
-                checkpointDir: Option[String] = None): DataFrame = {
+  def bpeMerges(documents: DataFrame, rounds: Int = 8): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    bpeTrain(documents, rounds, checkpointDir)._2
+    bpeTrain(documents, rounds)._2
       .toDF("merge_rank", "lhs", "rhs", "merged", "cnt").orderBy("merge_rank")
   }
 
@@ -212,9 +212,8 @@ object Modeling extends QueryModule {
     * able after AQE measures it; left unhinted so huge vocabs degrade
     * to a shuffle join instead of an OOM).
     */
-  def bpeEncodeReport(documents: DataFrame, rounds: Int = 8,
-                      checkpointDir: Option[String] = None): DataFrame = {
-    val (words, _) = bpeTrain(documents, rounds, checkpointDir)
+  def bpeEncodeReport(documents: DataFrame, rounds: Int = 8): DataFrame = {
+    val (words, _) = bpeTrain(documents, rounds)
     val vocab = words.select(col("word"), size(col("t")).cast("long").as("n_tok"))
     documents
       .select(col("doc_id"), col("lang"),
@@ -352,7 +351,7 @@ object Modeling extends QueryModule {
     val cells = graft.plans.Checkpoints.cut(
       binned.groupBy("bin")
         .agg(count(lit(1)).as("n"), sum("y").as("pos"))
-        .withColumn("neg", col("n") - col("pos")), None)
+        .withColumn("neg", col("n") - col("pos")))
     val tot = cells.agg(sum("pos").as("tp"), sum("neg").as("tn"))
     cells.crossJoin(broadcast(tot))
       .withColumn("woe_micro",
@@ -681,8 +680,7 @@ object Modeling extends QueryModule {
     * row (broadcast — the coefficient frame is model-count-sized), sum
     * the gradient+Hessian per key, Newton-solve per key row.
     */
-  private def irlsStep(rows: DataFrame, coef: DataFrame, keys: Seq[String],
-                       checkpointDir: Option[String]): DataFrame = {
+  private def irlsStep(rows: DataFrame, coef: DataFrame, keys: Seq[String]): DataFrame = {
     val joined =
       if (keys.isEmpty) rows.crossJoin(broadcast(coef))
       else rows.join(broadcast(coef), keys)
@@ -718,7 +716,7 @@ object Modeling extends QueryModule {
     // the final scoring pass, re-running the corpus aggregate
     // exponentially (the q177 lineage-cut argument); with it, exactly
     // one feature scan per round
-    graft.plans.Checkpoints.cut(step, checkpointDir)
+    graft.plans.Checkpoints.cut(step)
   }
 
   /** q206: trained logistic-regression quality classifier — y = (lang
@@ -745,12 +743,11 @@ object Modeling extends QueryModule {
     * ~10⁷ docs the 10¹²-scaled Hessian sums need decimal widening —
     * the q159/q122 note, wired the same way.
     */
-  def qualityLogistic(documents: DataFrame, iters: Int = 2,
-                      checkpointDir: Option[String] = None): DataFrame = {
+  def qualityLogistic(documents: DataFrame, iters: Int = 2): DataFrame = {
     val feats = logisticFeatures(documents)
     var coef = documents.sparkSession.range(1).select(
       lit(0L).as("b0q"), lit(0L).as("b1q"), lit(0L).as("b2q"))
-    for (_ <- 1 to iters) coef = irlsStep(feats, coef, Nil, checkpointDir)
+    for (_ <- 1 to iters) coef = irlsStep(feats, coef, Nil)
     feats.crossJoin(broadcast(coef))
       .withColumn("pq",
         expr("cast(floor(1e6 / (1.0 + exp(-((b0q + b1q*x1 + b2q*x2) / 1e6)))) as bigint)"))
@@ -779,8 +776,7 @@ object Modeling extends QueryModule {
     * engine-reproducible; all determinism arguments of [[qualityLogistic]]
     * carry over per fold.
     */
-  def cvLogistic(documents: DataFrame, folds: Int = 3, iters: Int = 2,
-                 checkpointDir: Option[String] = None): DataFrame = {
+  def cvLogistic(documents: DataFrame, folds: Int = 3, iters: Int = 2): DataFrame = {
     val foldCol = (conv(substring(md5(concat(lit("cv|"), col("doc_id"))), 1, 15), 16, 10)
       .cast("long") % folds).as("fold")
     val ts = split(lower(col("text")), " ")
@@ -794,7 +790,7 @@ object Modeling extends QueryModule {
       col("y"), col("x1"), col("x2"))
     var coef = documents.sparkSession.range(folds).select(
       col("id").as("mf"), lit(0L).as("b0q"), lit(0L).as("b1q"), lit(0L).as("b2q"))
-    for (_ <- 1 to iters) coef = irlsStep(train, coef, Seq("mf"), checkpointDir)
+    for (_ <- 1 to iters) coef = irlsStep(train, coef, Seq("mf"))
     feats.join(broadcast(coef), col("fold") === col("mf"))
       .withColumn("pq", expr(SigmoidQ))
       .groupBy("fold")
@@ -1294,8 +1290,7 @@ object Modeling extends QueryModule {
     * runs on schema-bounded frames; `pi` is cut each round so the
     * iteration state stays a k-row leaf.
     */
-  def bradleyTerry(documents: DataFrame, iters: Int = 3,
-                   checkpointDir: Option[String] = None): DataFrame = {
+  def bradleyTerry(documents: DataFrame, iters: Int = 3): DataFrame = {
     val a = documents.select(col("doc_id"), col("source"), col("n_chars"))
     val duels = a.alias("a").join(a.alias("b"), expr("b.doc_id = a.doc_id + 1"))
       .filter(col("a.source") =!= col("b.source"))
@@ -1306,7 +1301,7 @@ object Modeling extends QueryModule {
     // (i, j, winner) counts; the cut makes every downstream reference
     // (pairs, wins, 3×2 broadcast arms, games) a scan of bounded blocks
     val duelStats = graft.plans.Checkpoints.cut(
-      duels.groupBy("sa", "sb", "w").agg(count(lit(1)).as("dn")), checkpointDir)
+      duels.groupBy("sa", "sb", "w").agg(count(lit(1)).as("dn")))
     val pairs = duelStats.select(col("sa").as("i"), col("sb").as("j"), col("dn"))
       .unionAll(duelStats.select(col("sb").as("i"), col("sa").as("j"), col("dn")))
       .groupBy("i", "j").agg(sum("dn").as("n"))
@@ -1328,8 +1323,7 @@ object Modeling extends QueryModule {
       val tot = raw.agg(sum("raw").as("tot"))
       pi = graft.plans.Checkpoints.cut(
         raw.crossJoin(broadcast(tot)).crossJoin(broadcast(kk))
-          .select(col("i"), expr("cast(raw as decimal(38,0)) * k * 1000000L div tot").as("p")),
-        checkpointDir)
+          .select(col("i"), expr("cast(raw as decimal(38,0)) * k * 1000000L div tot").as("p")))
     }
     val games = pairs.groupBy("i").agg(sum("n").as("n_games"))
     wins.join(games, "i").join(pi, "i")

@@ -202,7 +202,7 @@ object RangeJoin extends QueryModule {
         .select(col("variant"), col("src"),
           when(col("dst") === col("variant"), lit("NULL")).otherwise(col("dst")).as("dst"),
           col("cnt"))
-        .groupBy("variant", "src", "dst").agg(sum("cnt").as("cnt")), None)
+        .groupBy("variant", "src", "dst").agg(sum("cnt").as("cnt")))
     // NOTE (r13 optimization round): collapsing the per-round
     // join+aggregate into higher-order-function algebra over a
     // one-row-per-variant adjacency array was tried and REVERTED —
@@ -212,7 +212,7 @@ object RangeJoin extends QueryModule {
     // (measured 4.1 s -> 13.9 s at sf0.1). The broadcast iteration below
     // keeps each round's frame materialized by the exchange.
     val outs = graft.plans.Checkpoints.cut(
-      eds.groupBy("variant", "src").agg(sum("cnt").as("o")), None)
+      eds.groupBy("variant", "src").agg(sum("cnt").as("o")))
     var v = outs.select(col("variant"), col("src").as("state"), lit(0L).as("v"))
     for (_ <- 1 to steps) {
       v = eds

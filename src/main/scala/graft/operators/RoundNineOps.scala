@@ -168,7 +168,7 @@ object RoundNineOps extends QueryModule {
       .withColumn("q", expr("(v1 + v2 + v3) * 1000000 div 3"))
     // the ONLY corpus-sized work; cut so each EM round reads an 8-row
     // leaf instead of re-scanning the corpus (the q301 lesson)
-    var pat = graft.plans.Checkpoints.cut(pat0, None)
+    var pat = graft.plans.Checkpoints.cut(pat0)
     for (_ <- 1 until rounds) pat = dsEStep(pat, dsModel(pat))
     val m = dsModel(pat)
     def rater(name: String, se: String, sp: String) =
@@ -556,7 +556,7 @@ object RoundNineOps extends QueryModule {
           col("n_c").cast("double") * col("d") * col("d")) * 1e6).cast("long")))
     // bounded frame from here: one row per source — cut so the three
     // consumers (rank, m, k*) read materialized rows, not the ECDF grid
-    val ksCut = graft.plans.Checkpoints.cut(ks, None)
+    val ksCut = graft.plans.Checkpoints.cut(ks)
     val ranked = ksCut
       .withColumn("rank", row_number().over(
         Window.orderBy(col("p_micro"), col("source"))).cast("long"))

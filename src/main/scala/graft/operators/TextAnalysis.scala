@@ -786,7 +786,7 @@ object TextAnalysis extends QueryModule {
         graft.functions.ShingleSet.shingleWindowsExact(lower(col("text")), 3))
         .as("token"))
       .groupBy("token").agg(count(lit(1)).as("r"))
-      .groupBy("r").agg(count(lit(1)).as("n_r")), None)
+      .groupBy("r").agg(count(lit(1)).as("n_r")))
     val w = Window.partitionBy(lit(1))
     nr.join(broadcast(nr.select((col("r") - 1).as("r"), col("n_r").as("n_r1"))),
         Seq("r"), "left")

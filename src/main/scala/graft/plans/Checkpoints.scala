@@ -3,11 +3,12 @@ package graft.plans
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage-breaking for iterative plans (CC rounds, PageRank, triangle
-  * phases), with a reliability knob and a scoped storage-release API.
+  * phases), with a reliability switch and a scoped storage-release API.
   *
-  * Default (`dir = None` and the session conf unset) is
+  * Default (`spark.graft.checkpointDir` unset) is
   * `localCheckpoint(eager = true)`: blocks are materialized in executor
   * storage — fastest, but an executor loss mid-iteration kills the
   * lineage and the job. That is the right trade in a single-JVM sandbox
@@ -17,16 +18,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * executor and restarts from materialized state instead of replaying
   * the whole lineage chain.
   *
-  * The reliable path is reachable two ways:
-  *   - per call site, `cut(df, Some(path))` — explicit plumbing;
-  *   - session-wide, `spark.conf.set("spark.graft.checkpointDir", path)`
-  *     — every `cut(df, None)` in the session upgrades to `checkpoint()`
-  *     into that directory with NO call-site changes. This is the knob a
-  *     cluster deployment flips: the query surface (`SparkEntry.queries`)
-  *     constructs operators with `checkpointDir = None`, and the conf
-  *     re-routes all of them at once. (Checkpoint files are cleaned by
-  *     Spark only with `spark.cleaner.referenceTracking.cleanCheckpoints`
-  *     — lifecycle of the directory belongs to the deployment.)
+  * The reliable path is reachable one way: the session conf
+  * `spark.conf.set("spark.graft.checkpointDir", path)`. Every [[cut]] in
+  * the session then upgrades to `checkpoint()` into that directory, with
+  * no call-site change; operators take no directory of their own, so a
+  * deployment flips every iterative query at once. (Checkpoint files are
+  * cleaned by Spark only with
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` — lifecycle of the
+  * directory belongs to the deployment.)
   *
   * The checkpoint directory is process-global in Spark
   * (`SparkContext.setCheckpointDir`); it is set lazily on first use and
@@ -49,7 +48,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object Checkpoints {
 
-  /** Session conf key for the reliable-checkpoint upgrade. */
+  /** Session conf key for the reliable-checkpoint upgrade (a deployment
+    * path; unset or blank means local cuts). */
   val DirConf = "spark.graft.checkpointDir"
 
   /** Session conf key that turns every [[cut]] into a no-op. A cut
@@ -70,12 +70,10 @@ object Checkpoints {
   private val pinnedRddIds = ConcurrentHashMap.newKeySet[Integer]()
   private val pinnedDatasets = new ConcurrentLinkedQueue[Dataset[_]]()
 
-  def cut(df: DataFrame, dir: Option[String]): DataFrame = {
+  def cut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     if (spark.conf.getOption(DisableConf).contains("true")) return df
-    val effective =
-      dir.orElse(spark.conf.getOption(DirConf).map(_.trim).filter(_.nonEmpty))
-    effective match {
+    spark.conf.getOption(DirConf).map(_.trim).filter(_.nonEmpty) match {
       case Some(d) =>
         val sc = spark.sparkContext
         synchronized {
@@ -116,15 +114,20 @@ object Checkpoints {
     * corpus-sized outputs (those would pin corpus-scale storage).
     */
   def cutSorted(df: DataFrame, sortCols: org.apache.spark.sql.Column*): DataFrame =
-    cut(df, None).orderBy(sortCols: _*)
+    cut(df).orderBy(sortCols: _*)
 
   /** `cache()` an intermediate that the operator's RESULT plan consumes
     * lazily (so the operator itself has no safe point to unpersist), and
-    * register it for [[release]]. Returns the same Dataset.
+    * register it for [[release]]. Returns the same Dataset. A plan that
+    * is already cached belongs to whoever cached it: it is neither
+    * re-cached nor registered, so [[release]] never drops another
+    * owner's cache.
     */
   def pin[T](ds: Dataset[T]): Dataset[T] = {
-    ds.cache()
-    pinnedDatasets.add(ds)
+    if (ds.storageLevel == StorageLevel.NONE) {
+      ds.cache()
+      pinnedDatasets.add(ds)
+    }
     ds
   }
 

@@ -124,8 +124,9 @@ class ModelingSpec extends SparkSpec {
     val d = docs((1L, "s", "low lower lowest"), (2L, "t", "low slow glow"))
     val dir = java.nio.file.Files.createTempDirectory("bpeck").toString
     val a = operators.Modeling.bpeMerges(d, rounds = 4).collect().toSeq
-    val b = operators.Modeling.bpeMerges(d, rounds = 4, checkpointDir = Some(dir))
-      .collect().toSeq
+    spark.conf.set(graft.plans.Checkpoints.DirConf, dir)
+    val b = try operators.Modeling.bpeMerges(d, rounds = 4).collect().toSeq
+      finally spark.conf.unset(graft.plans.Checkpoints.DirConf)
     assert(a == b, s"default=$a reliable=$b")
   }
 
@@ -339,7 +340,9 @@ class ModelingSpec extends SparkSpec {
     val d = lrDocs(30)
     val dir = java.nio.file.Files.createTempDirectory("lr_ck").toString
     val a = operators.Modeling.qualityLogistic(d).collect().toSeq
-    val b = operators.Modeling.qualityLogistic(d, checkpointDir = Some(dir)).collect().toSeq
+    spark.conf.set(graft.plans.Checkpoints.DirConf, dir)
+    val b = try operators.Modeling.qualityLogistic(d).collect().toSeq
+      finally spark.conf.unset(graft.plans.Checkpoints.DirConf)
     assert(a == b)
   }
 

@@ -551,7 +551,7 @@ class PlanAssertionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("q314 modularity: per-community frames aggregate map-side, no cartesian") {
     val p = planText({ val e = graft.operators.GraphOps.copurchaseEdges(t.lineitem)
-      graft.operators.GraphOps.lpModularity(e, graft.operators.GraphOps.lpLabels(e, 2, None)) })
+      graft.operators.GraphOps.lpModularity(e, graft.operators.GraphOps.lpLabels(e, 2)) })
     assert(!p.contains("CartesianProduct"), s"unexpected cartesian:\n$p")
     assert(p.contains("partial_count") || p.contains("partial_sum"),
       s"expected map-side partials:\n$p")

@@ -58,21 +58,18 @@ class GraphOpsSpec extends SparkSpec {
 
   test("reliable checkpointDir path agrees with the localCheckpoint default") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val viaReliable = GraphOps.triangleCensus(GraphOps.copurchaseEdges(li), checkpointDir = Some(dir))
-      .as[(Long, Long, Long, Long, Double)].head()
+    val undirected = GraphOps.copurchaseEdges(li)
+    spark.conf.set(graft.plans.Checkpoints.DirConf, dir)
+    val (viaReliable, rankReliable) = try {
+      (GraphOps.triangleCensus(GraphOps.copurchaseEdges(li))
+        .as[(Long, Long, Long, Long, Double)].head(),
+       GraphOps.copurchaseRank(undirected).as[(Long, Long)].collect().toMap)
+    } finally spark.conf.unset(graft.plans.Checkpoints.DirConf)
     val viaLocal = GraphOps.triangleCensus(GraphOps.copurchaseEdges(li))
       .as[(Long, Long, Long, Long, Double)].head()
     assert(viaReliable == viaLocal)
-    val undirected = GraphOps.copurchaseEdges(li)
-    val rankReliable = GraphOps.copurchaseRank(undirected, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
     val rankLocal = GraphOps.copurchaseRank(undirected).as[(Long, Long)].collect().toMap
     assert(rankReliable == rankLocal)
-    val ccEdges = Seq((1L, 2L), (2L, 3L), (9L, 10L)).toDF("l", "r")
-    val ccReliable = Dedup.connectedComponentsStar(ccEdges, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toSet
-    val ccLocal = Dedup.connectedComponentsStar(ccEdges).as[(Long, Long)].collect().toSet
-    assert(ccReliable == ccLocal)
     // reliable mode actually wrote RDD checkpoints to the requested store
     assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() > 0)
   }

@@ -37,24 +37,22 @@ class RandomizedParitySpec extends SparkSpec {
       val got = Dedup.connectedComponents(edges.toDF("left_id", "right_id"))
         .as[(Long, Long)].collect().toMap
       assert(got == expected, s"seed=$seed edges=$edges")
-      // the O(log n)-round general-graph variant must agree exactly
-      val star = Dedup.connectedComponentsStar(edges.toDF("left_id", "right_id"))
-        .as[(Long, Long)].collect().toMap
-      assert(star == expected, s"star seed=$seed edges=$edges")
     }
   }
 
-  test("connectedComponentsStar handles long chains in few rounds") {
-    // a 64-node path: diameter 63 — min-label propagation needs ~63
-    // rounds, the alternating algorithm O(log n); also the worst case
-    // for label correctness (every node but one relabels)
+  test("connectedComponents handles long chains in few rounds") {
+    // a 64-node path: diameter 63 — neighbor-min propagation alone needs
+    // ~63 rounds, the pointer jump O(log n), so a 12-round cap converges
+    // only with the jump (q296's DBSCAN core graph is such an eps-chain);
+    // also the worst case for label correctness (every node but one
+    // relabels)
     val chain = (0L until 63L).map(i => (i, i + 1))
-    val got = Dedup.connectedComponentsStar(chain.toDF("left_id", "right_id"), maxIters = 12)
+    val got = Dedup.connectedComponents(chain.toDF("left_id", "right_id"), maxIters = 12)
       .as[(Long, Long)].collect().toMap
     assert(got.size == 64 && got.values.forall(_ == 0L))
     // two chains + a singleton pair keep separate labels
     val two = chain ++ (100L until 110L).map(i => (i, i + 1)) ++ Seq((500L, 501L))
-    val got2 = Dedup.connectedComponentsStar(two.toDF("l", "r"), maxIters = 12)
+    val got2 = Dedup.connectedComponents(two.toDF("l", "r"), maxIters = 12)
       .as[(Long, Long)].collect().toMap
     assert(got2(63L) == 0L && got2(110L) == 100L && got2(501L) == 500L)
   }

@@ -19,7 +19,7 @@ class Round8LateOpsSpec extends SparkSpec {
     // orders 1 and 2 each buy a 3-item set: two triangles, no bridge
     val d = li(Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 4L), (2L, 5L), (2L, 6L)))
     val r = { val e = GraphOps.copurchaseEdges(d)
-      GraphOps.lpModularity(e, GraphOps.lpLabels(e, 2, None)).collect()(0) }
+      GraphOps.lpModularity(e, GraphOps.lpLabels(e, 2)).collect()(0) }
     assert(r.getAs[Long]("n_edges") == 6L)
     assert(r.getAs[Long]("n_communities") == 2L)
     assert(r.getAs[Long]("n_intra") == 6L)
@@ -29,7 +29,7 @@ class Round8LateOpsSpec extends SparkSpec {
   test("lpModularity: corpus graph scores a bounded, defined Q") {
     val d = spark.read.parquet(s"${sf("")}/lineitem.parquet")
     val r = { val e = GraphOps.copurchaseEdges(d)
-      GraphOps.lpModularity(e, GraphOps.lpLabels(e, 2, None)).collect()(0) }
+      GraphOps.lpModularity(e, GraphOps.lpLabels(e, 2)).collect()(0) }
     val q = r.getAs[Double]("modularity")
     assert(q >= -1.0 && q <= 1.0)
     assert(r.getAs[Long]("n_intra") <= r.getAs[Long]("n_edges"))

@@ -49,7 +49,7 @@ class SharedArtifactsSpec extends SparkSpec {
     assert(v2 == Set((20L, 21L), (20L, 22L), (21L, 22L)),
       "regenerated corpus must serve fresh edges, not the stale table")
     // cleanup drops every shared artifact from the warehouse
-    GraphOps.dropSharedArtifacts(spark)
+    graft.sources.Bucketing.dropSharedArtifacts(spark)
     val left = spark.sessionState.catalog.listTables("default").map(_.table)
       .filter(t => t.startsWith(GraphOps.EdgeTable) ||
                    t.startsWith(GraphOps.LpLabelTable))

@@ -91,7 +91,7 @@ class SharedTruthWeightedEdgesSpec extends SparkSpec {
       .select("left_id", "right_id").as[(Long, Long)].collect().toSet
     assert(fresh == Set((7L, 8L)))
     // cleanup clears the warehouse; consumers rebuild on next use
-    Dedup.dropSharedArtifacts(spark)
+    graft.sources.Bucketing.dropSharedArtifacts(spark)
     val left = spark.sessionState.catalog.listTables("default").map(_.table)
       .filter(_.startsWith(Dedup.PpjoinTruthTable))
     assert(left.isEmpty, s"dropSharedArtifacts must clear the warehouse: $left")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Contract of the reliability knob and the storage-release API
   * (round-7 verdict items 1-2):
-  *   - `spark.graft.checkpointDir` set → `cut(df, None)` upgrades to the
+  *   - `spark.graft.checkpointDir` set → `cut(df)` upgrades to the
   *     RELIABLE checkpoint() path (files land under the dir) without any
   *     call-site change;
   *   - conf unset → localCheckpoint, whose pinned blocks (plus every
@@ -17,13 +17,13 @@ import org.apache.spark.sql.functions._
   */
 class CheckpointsSpec extends SparkSpec {
 
-  test("conf set: cut(df, None) takes the reliable checkpoint() path") {
+  test("conf set: cut(df) takes the reliable checkpoint() path") {
     val dir = Files.createTempDirectory("graft-ckpt").toFile
     spark.conf.set(Checkpoints.DirConf, dir.getAbsolutePath)
     try {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val df = Checkpoints.cut(
-        spark.range(100).toDF("x").withColumn("y", col("x") * 2), None)
+        spark.range(100).toDF("x").withColumn("y", col("x") * 2))
       assert(df.agg(sum("y")).head().getLong(0) == 9900L)
       // reliable checkpoint writes rdd-* files under the dir ...
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -44,7 +44,7 @@ class CheckpointsSpec extends SparkSpec {
   test("conf unset: cut pins local blocks; release drains them") {
     Checkpoints.release(spark) // start from a drained registry
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = Checkpoints.cut(spark.range(1000).toDF("x"), None)
+    val df = Checkpoints.cut(spark.range(1000).toDF("x"))
     assert(df.count() == 1000L)
     val pinned = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(pinned.nonEmpty, "localCheckpoint should pin blocks")
@@ -59,6 +59,19 @@ class CheckpointsSpec extends SparkSpec {
     assert(ds.storageLevel.useMemory, "pin must cache")
     Checkpoints.release(spark)
     assert(!ds.storageLevel.useMemory, "release must unpersist pinned caches")
+  }
+
+  test("pin leaves a cache it did not create: release keeps the caller's frame cached") {
+    import spark.implicits._
+    Checkpoints.release(spark)
+    val edges = Seq(("a", "b"), ("b", "c")).toDF("child", "parent")
+    // the plan transitiveClosure pins as its edge set
+    val mine = edges.select(col("child"), col("parent")).distinct().cache()
+    try {
+      assert(graft.operators.EntityGraph.transitiveClosure(edges).count() == 3L)
+      Checkpoints.release(spark)
+      assert(mine.storageLevel.useMemory, "release dropped the caller's cache")
+    } finally mine.unpersist()
   }
 
   test("no graft storage survives a GraphOps+Clustering+Modeling+EntityGraph sequence + release") {
