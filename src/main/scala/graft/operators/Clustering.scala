@@ -726,17 +726,17 @@ object Clustering extends QueryModule {
     "q306_hopkins" -> ((s, d) => hopkinsStatistic(Tables(s, d).embeddings)),
     // kc (coarse cells) is the IVF size knob — probe cost ≈ nprobe/kc
     // of the corpus, so a pinned kc is linear-per-probe at any size.
-    // Explicit spark.graft.ivf.cells wins; autosize derives kc = ⌈√n⌉
-    // (Autosize.ivfCellsLaw — balances centroid scan vs cell scan);
-    // default stays the oracle-pinned 8. Same for q267 below.
+    // Autosize derives kc = ⌈√n⌉ (Autosize.ivfCellsLaw — balances
+    // centroid scan vs cell scan); default stays the oracle-pinned 8.
+    // Same for q267 below.
     "q295_ivfpq_recall" -> ((s, d) => ivfPqRecall(Tables(s, d).embeddings,
       kc = graft.plans.Autosize.ivfConf(s, d))),
     "q296_dbscan" -> ((s, d) => dbscanReport(Tables(s, d).embeddings)),
     // k is the SIZE knob that must scale with the corpus: SemDeDup's
     // Σnᵢ² pairwise bound is linear only when k ∝ n (fixed k=8 on 10×
     // data measured 18× in the sf1 scale sweep — by design, not defect).
-    // Explicit spark.graft.kmeans.k wins; spark.graft.autosize derives
-    // k = max(8, ⌈n/250⌉) (the sf0.1 default's per-cluster membership)
+    // spark.graft.autosize derives k = max(8, ⌈n/250⌉) (the sf0.1
+    // default's per-cluster membership)
     "q176_kmeans"   -> ((s, d) => kmeansReport(Tables(s, d).embeddings,
       k = graft.plans.Autosize.kmeansConf(s, d))),
     "q177_semdedup" -> ((s, d) => semDedupReport(Tables(s, d).embeddings,

@@ -51,7 +51,8 @@ object CorpusOps extends QueryModule {
     * `blocks` rows), then within-block running sums shift by the block
     * offset. Block boundaries never affect the result (the spec pins
     * two-phase == naive window), so the range sampler's placement
-    * doesn't matter. The tokenization is materialized eagerly BEFORE the
+    * doesn't matter. The tokenization is materialized eagerly (one
+    * [[graft.plans.Checkpoints.cut]], drained by `release`) BEFORE the
     * range partitioning — RangePartitioner's boundary-sampling pass
     * would otherwise re-evaluate the split over the whole corpus a
     * second time; after the checkpoint, the sampler and both phases read
@@ -59,9 +60,8 @@ object CorpusOps extends QueryModule {
     */
   def shardPacking(documents: DataFrame, budgetTokens: Long = 5000L,
                    blocks: Int = 32): DataFrame = {
-    val base = documents.select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("toks"))
-      .localCheckpoint(true)
+    val base = graft.plans.Checkpoints.cut(documents.select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("toks")))
     val toks = base.repartitionByRange(blocks, col("doc_id"))
       .withColumn("block", spark_partition_id())
     val blockOffsets = toks.groupBy("block").agg(sum(col("toks")).as("block_sum"))

@@ -277,18 +277,11 @@ object Dedup extends QueryModule {
     *
     * Scale shape: per-doc features (8-salt signature vector + shingle
     * set) tokenize the shingle array once and hash it per salt; the
-    * feature scan is pure narrow work. `scopeToCandidates` computes
-    * features only for docs appearing in some pair (broadcast
-    * semi-join) — the same tradeoff as [[nearDupClusters]]'s
-    * `scopeVerifyToCandidates`: asymptotically right at 100 TB where
-    * banding touches <1% of the corpus, but measured ~20% SLOWER at
-    * sf0.1 where candidates are ~8% of docs (the id scope re-derives
-    * the banding chain and serializes the feature scan behind it +
-    * broadcast barriers, while the unscoped feature scan is
-    * embarrassingly parallel and never shuffles — the candidate table
-    * broadcasts onto it). Same default logic as q58's verify scope:
-    * measured-faster off, flip on when banding touches a sliver.
-    * The estimator's
+    * feature scan is pure narrow work over the whole corpus, and the
+    * candidate table broadcasts onto it. (Scoping features to candidate
+    * docs by a semi-join measured ~20% slower at sf0.1, where candidates
+    * are ~8% of docs: it re-derives the banding chain and serializes the
+    * feature scan behind it.) The estimator's
     * salts (`acc0..`) are DISJOINT from the banding salt (`salt0`):
     * candidate pairs agree on the band component by construction, so
     * including it would floor every estimate at 1/k and systematically
@@ -297,29 +290,15 @@ object Dedup extends QueryModule {
     * (order pinned by construction), and the exact ratio is
     * integers-divided-once.
     */
-  def minhashAccuracy(documents: DataFrame, nHashes: Int = 8,
-                      scopeToCandidates: Boolean = false): DataFrame = {
+  def minhashAccuracy(documents: DataFrame, nHashes: Int = 8): DataFrame = {
     val cands = lshCandidatePairs(documents, sorted = false).select("left_id", "right_id")
-    val featSrc =
-      if (scopeToCandidates) {
-        // the id scope re-derives the candidate chain instead of caching
-        // it: a cache pinned here could never be unpersisted (no action
-        // runs inside this lazily-built plan, unlike nearDupLabels'
-        // internal CC loop), and leaking session-lifetime executor
-        // storage costs more than one extra narrow md5 pass + small-key
-        // shuffle
-        val ids = lshCandidatePairs(documents, sorted = false)
-          .select(explode(array(col("left_id"), col("right_id"))).as("doc_id"))
-          .distinct()
-        documents.join(broadcast(ids), Seq("doc_id"), "left_semi")
-      } else documents
     // ONE multi-salt fused text→minhash kernel for the whole estimator
     // signature (bit-identical to array(text_minhash_md5(t,"acc0|"), …)
     // but tokenize + shingle-byte construction — the dominant cost —
     // run once, not once per salt), NOT minhash over a shared
     // shingle-array column: CollapseProject would inline the array
     // into every consumer (9 shingle expansions)
-    val feats = featSrc.select(
+    val feats = documents.select(
       col("doc_id"),
       graft.functions.ShingleSet.shingleSet(col("text")).as("sh"),
       graft.functions.MinHashMd5.textMinhashMd5Multi(col("text"),
@@ -332,7 +311,7 @@ object Dedup extends QueryModule {
     // signature (heavy arrays) where the per-side joins broadcast the
     // tiny pair table onto embarrassingly-parallel scans and shuffle
     // nothing. At 100 TB the same logic holds so long as candidates fit
-    // a broadcast; past that, flip to the scoped-feature path above.
+    // a broadcast.
     val report = cands
       .join(feats.select(col("doc_id").as("left_id"),
         col("sh").as("lsh"), col("sig").as("lsig")), "left_id")
@@ -460,19 +439,10 @@ object Dedup extends QueryModule {
     * shuffled join + aggregate; convergence count doubles as the
     * termination action, and near-dup components have tiny diameters so
     * the loop is short).
-    *
-    * `scopeVerifyToCandidates`: compute shingle sets only for docs that
-    * appear in a candidate pair (semi-join) instead of the whole corpus.
-    * Asymptotically right when candidates are a sliver of the corpus
-    * (the 100 TB regime — banding touches <1%), but it serializes the
-    * pipeline behind the LSH stage and re-scans the text column, which
-    * measures slower at sf0.1 where candidates are ~8% of docs. Flip it
-    * when |candidate docs| / |corpus| is small.
     */
   def nearDupClusters(documents: DataFrame, threshold: Double = 0.2,
-                      maxIters: Int = 20,
-                      scopeVerifyToCandidates: Boolean = false): DataFrame =
-    nearDupLabels(documents, threshold, maxIters, scopeVerifyToCandidates)
+                      maxIters: Int = 20): DataFrame =
+    nearDupLabels(documents, threshold, maxIters)
       .groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("n_members"),
            concat_ws(",", sort_array(collect_list(col("id")))).as("members"))
@@ -483,29 +453,19 @@ object Dedup extends QueryModule {
     * picker (q92).
     */
   def nearDupLabels(documents: DataFrame, threshold: Double = 0.2,
-                    maxIters: Int = 20,
-                    scopeVerifyToCandidates: Boolean = false): DataFrame = {
-    // Candidates first, cached: they drive everything downstream.
+                    maxIters: Int = 20): DataFrame = {
+    // Candidates flow straight into the verify join, uncached.
     // (Measured alternative: deriving the band key from cached shingle
     // arrays via interpreted transform+md5 is ~20% SLOWER cold than the
     // fused native TextMinHashMd5 re-tokenizing — interpreted HOF md5
     // costs more than the second tokenize pass.)
-    val cands0 = lshCandidatePairs(documents, sorted = false)
+    val cands = lshCandidatePairs(documents, sorted = false)
       .select(col("left_id"), col("right_id"))
-    // cache only when the scoped path will read candidates twice
-    // (candIds + verify join); otherwise they flow straight into the
-    // verify join and an extra cache layer is pure overhead
-    val cands = if (scopeVerifyToCandidates) cands0.cache() else cands0
     // Shingle sets for the verify join, cached — both join sides read
-    // the one InMemoryRelation. Optionally scoped to candidate docs
-    // (see scaladoc).
-    val shSource =
-      if (scopeVerifyToCandidates) {
-        val candIds = cands.select(col("left_id").as("doc_id"))
-          .unionByName(cands.select(col("right_id").as("doc_id"))).distinct()
-        documents.join(candIds, Seq("doc_id"), "left_semi")
-      } else documents
-    val withSh = shSource
+    // the one InMemoryRelation. (Scoping them to candidate docs by a
+    // semi-join measured slower at sf0.1, where candidates are ~8% of
+    // docs: it serializes the pipeline behind the LSH stage.)
+    val withSh = documents
       .select(col("doc_id"), graft.functions.ShingleSet.shingleSet(col("text")).as("sh"))
       .cache()
     val inter = size(array_intersect(col("a.sh"), col("b.sh")))
@@ -518,10 +478,9 @@ object Dedup extends QueryModule {
                 >= threshold)
       .select(col("left_id"), col("right_id"))
     val labels = connectedComponents(verified, maxIters)
-    // CC's driver loop has run by now, so the candidate and shingle
-    // caches served their purpose — release them
+    // CC's driver loop has run by now, so the shingle cache served its
+    // purpose — release it
     withSh.unpersist()
-    if (scopeVerifyToCandidates) cands.unpersist()
     labels
   }
 
@@ -597,11 +556,6 @@ object Dedup extends QueryModule {
     * Returns (id, label) for every node that appears in some edge.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    // session-conf round-cap knob, same pattern as the graph family:
-    // `spark.graft.rounds.cc` raises the convergence cap cluster-wide
-    // with no code edits (a deeper cap never changes a CONVERGED answer
-    // — it only lets long-diameter components finish)
-    val cap = graft.plans.Rounds.of(pairs.sparkSession, "cc", maxIters)
     val edges = pairs.toDF("src", "dst")
     val sym = graft.plans.Checkpoints.cut(
       edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
@@ -640,7 +594,7 @@ object Dedup extends QueryModule {
     var delta = labels
     var i = 0
     var converged = false
-    while (!converged && i < cap) {
+    while (!converged && i < maxIters) {
       val fromNeighbors = sym.join(delta, sym("src") === delta("id"))
         .groupBy(col("dst").as("id")).agg(min(col("label")).as("nlabel"))
       // carry the old label through so convergence is checked against the
@@ -683,7 +637,7 @@ object Dedup extends QueryModule {
       if (changed == 0L) converged = true else i += 1
     }
     if (!converged) System.err.println(
-      s"[graft] connectedComponents stopped at maxIters=$cap before convergence")
+      s"[graft] connectedComponents stopped at maxIters=$maxIters before convergence")
     // the cuts have materialized `labels`; the edge list and the final
     // (empty-at-convergence) frontier are no longer needed (the final
     // cut blocks back the returned frame and drain via

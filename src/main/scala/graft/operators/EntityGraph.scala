@@ -99,7 +99,7 @@ object EntityGraph extends QueryModule {
     // levels for int64 keys), so the depth guard
     // (spark.sql.cteRecursionLevelLimit, default 100) is the right one
     // and the row cap is lifted FOR THIS QUERY ONLY: the recursion is
-    // forced eagerly (localCheckpoint — ≤15 rows after the LIMIT) inside
+    // forced eagerly (Checkpoints.cut — ≤15 rows after the LIMIT) inside
     // a save/restore of the prior limit, so later recursive CTEs on the
     // shared session keep their own guardrail.
     val limitKey = "spark.sql.cteRecursionRowLimit"
@@ -107,7 +107,7 @@ object EntityGraph extends QueryModule {
     spark.conf.set(limitKey, "-1")
     val view = "eg_part_hier"
     part.select(col("p_partkey"), col("p_retailprice")).createOrReplaceTempView(view)
-    try spark.sql(
+    try graft.plans.Checkpoints.cut(spark.sql(
       s"""WITH RECURSIVE anc AS (
          |  SELECT p_partkey AS node, p_partkey AS anc FROM $view
          |  UNION ALL
@@ -118,7 +118,7 @@ object EntityGraph extends QueryModule {
          |FROM anc a JOIN $view p ON p.p_partkey = a.node
          |GROUP BY a.anc
          |ORDER BY n_members DESC, ancestor LIMIT 15""".stripMargin)
-      .localCheckpoint() // eager: recursion runs NOW, under the lifted cap
+      ) // eager: recursion runs NOW, under the lifted cap
       .orderBy(col("n_members").desc, col("ancestor")) // checkpoint keeps rows, not order
     finally {
       spark.catalog.dropTempView(view)

@@ -1333,8 +1333,7 @@ object Modeling extends QueryModule {
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q301_bradley_terry" -> ((s, d) => bradleyTerry(Tables(s, d).documents,
-      iters = graft.plans.Rounds.of(s, "bradleyterry", 3))),
+    "q301_bradley_terry" -> ((s, d) => bradleyTerry(Tables(s, d).documents, iters = 3)),
     "q291_ndcg" -> ((s, d) => { val t = Tables(s, d)
       ndcgReport(t.lineitem, t.orders, t.part) }),
     "q290_unigram_segment" -> ((s, d) => unigramSegmentReport(Tables(s, d).documents)),
@@ -1353,8 +1352,7 @@ object Modeling extends QueryModule {
     "q337_mcnemar" -> ((s, d) => mcnemarTest(Tables(s, d).documents)),
     "q201_avg_precision" -> ((s, d) => averagePrecision(Tables(s, d).documents)),
     "q172_target_encoding" -> ((s, d) => targetEncoding(Tables(s, d).documents)),
-    "q206_quality_logistic" -> ((s, d) => qualityLogistic(Tables(s, d).documents,
-      iters = graft.plans.Rounds.of(s, "irls", 2))),
+    "q206_quality_logistic" -> ((s, d) => qualityLogistic(Tables(s, d).documents, iters = 2)),
     "q207_cv_logistic" -> ((s, d) => cvLogistic(Tables(s, d).documents)),
     "q208_mi_ranking" -> ((s, d) => miFeatureRanking(Tables(s, d).documents)),
     "q210_best_f1" -> ((s, d) => bestF1Thresholds(Tables(s, d).documents)),

@@ -920,8 +920,7 @@ object RoundNineOps extends QueryModule {
     "q340_renyi_efficiency" -> ((s, d) => renyiEfficiency(Tables(s, d).documents)),
     "q341_sprt_monitor" -> ((s, d) => sprtMonitor(Tables(s, d).events)),
     "q333_poisson_bootstrap" -> ((s, d) => poissonBootstrap(Tables(s, d).documents)),
-    "q334_dawid_skene" -> ((s, d) => dawidSkene(Tables(s, d).documents,
-      rounds = graft.plans.Rounds.of(s, "dawidskene", 2))),
+    "q334_dawid_skene" -> ((s, d) => dawidSkene(Tables(s, d).documents, rounds = 2)),
     "q335_confident_learning" -> ((s, d) => confidentLearning(Tables(s, d).documents)),
     "q336_embedding_isotropy" -> ((s, d) => embeddingIsotropy(Tables(s, d).embeddings)),
   )

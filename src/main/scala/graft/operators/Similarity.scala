@@ -719,12 +719,11 @@ object Similarity extends QueryModule {
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // setting spark.graft.margin.bands switches candidate generation to
-    // bipartite SRP blocking with that many bands (collision law
-    // |A|·|B|/2^bits); unset = exact brute A×B, oracle-pinned — unless
-    // spark.graft.autosize is on, which flips to blocked mode past
-    // |A|·|B| = 10⁶ candidate dots (Autosize.BruteDotCap — the sf1
-    // calibration point in Autosize's header)
+    // exact brute A×B, oracle-pinned — unless spark.graft.autosize is
+    // on, which flips to bipartite SRP blocking with 8 bands (collision
+    // law |A|·|B|/2^bits) past |A|·|B| = 10⁶ candidate dots
+    // (Autosize.BruteDotCap — the sf1 calibration point in Autosize's
+    // header); marginMining(srpBands = …) picks blocked mode directly
     "q305_margin_mining" -> ((s, d) => {
       val (bands, bits) = graft.plans.Autosize.marginConf(s, d)
       marginMining(Tables(s, d).embeddings, srpBands = bands, srpBits = bits)
@@ -750,9 +749,9 @@ object Similarity extends QueryModule {
     // bitsPerBand is SRP's size knob: random-pair collisions (and so the
     // verify-join volume) scale as n²/2^bits — the sf1 scale sweep
     // measured 16× on 10× data at the pinned default 8, and ~linear at
-    // bits=16 (SCALE.md). Defaults oracle-pinned; explicit conf wins;
-    // spark.graft.autosize derives bits = ⌈log₂ n⌉ + 2 from the corpus
-    // so the OUT-OF-THE-BOX production plan stays linear at any size.
+    // bits=16 (SCALE.md). Defaults oracle-pinned; spark.graft.autosize
+    // derives bits = ⌈log₂ n⌉ + 2 from the corpus so the OUT-OF-THE-BOX
+    // production plan stays linear at any size.
     "q76_srp_neardup"  -> ((s, d) => {
       val (bands, bits) = graft.plans.Autosize.srpConf(s, d)
       srpNearDupReport(Tables(s, d).embeddings, bands = bands, bitsPerBand = bits)

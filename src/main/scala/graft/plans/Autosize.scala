@@ -11,15 +11,13 @@ import org.apache.spark.sql.SparkSession
   * 100 TB unless it is derived from the corpus size.
   *
   * `spark.conf.set("spark.graft.autosize", "true")` turns derivation
-  * on; the precedence is always
-  *
-  *   explicit `spark.graft.<knob>` conf  >  autosize law  >  default,
-  *
-  * so the oracle harness (which sets nothing) keeps every pinned
-  * default and every CORRECTNESS hash untouched, an explicitly-set
-  * knob remains a deliberate semantic choice, and a production session
-  * opts into scale-safe widths with one flag instead of knowing each
-  * collision law by heart.
+  * on. Each size then has exactly one source: the autosize law when the
+  * flag is on, the oracle-pinned default when it is off. The oracle
+  * harness (which sets nothing) keeps every pinned default and every
+  * CORRECTNESS hash untouched, and a production session opts into
+  * scale-safe widths with one flag instead of knowing each collision
+  * law by heart. Code that needs another size passes it to the
+  * operator's own parameter.
   *
   * Laws (each measured by the sf1/30× slope sweeps, SCALE.md):
   *  - SRP band width: `bits = clamp(⌈log₂ n⌉ + 2, default, 30)` —
@@ -59,14 +57,11 @@ object Autosize {
   def tableCount(spark: SparkSession, dir: String, table: String): Long =
     graft.Tables.rowCount(spark, s"$dir/$table.parquet")
 
-  /** Resolve a sizing knob: explicit conf > autosize `law` > `default`.
+  /** Resolve a size: the autosize `law` when on, else `default`.
     * `law` is by-name so the (cached) corpus count only runs when used.
     */
-  def knob(spark: SparkSession, key: String, default: Int)(law: => Int): Int =
-    if (spark.conf.getOption(key).exists(_.trim.nonEmpty))
-      Rounds.posInt(spark, key, default)
-    else if (on(spark)) law
-    else default
+  def knob(spark: SparkSession, default: Int)(law: => Int): Int =
+    if (on(spark)) law else default
 
   /** ⌈log₂ n⌉ for n ≥ 1 (0 for n ≤ 1). */
   def ceilLog2(n: Long): Int =
@@ -109,31 +104,26 @@ object Autosize {
 
   /** (bands, bitsPerBand) for the q76/q84 SRP near-dup family. */
   def srpConf(spark: SparkSession, dir: String): (Int, Int) = {
-    val bands = Rounds.posInt(spark, "spark.graft.srp.bands", 8)
-    val bits = knob(spark, "spark.graft.srp.bits", 8)(
-      srpBitsLaw(tableCount(spark, dir, "embeddings")))
-    (bands, bits)
+    val bits = knob(spark, 8)(srpBitsLaw(tableCount(spark, dir, "embeddings")))
+    (8, bits)
   }
 
   /** Per-bucket expansion cap for CONNECTIVITY consumers of the SRP
     * banding (q84's clustering — never the q76 pair report): oversized
     * buckets star-compress to their min-id member, exact for true
-    * near-dup cliques (see Similarity.srpCandidatePairs). Unset +
-    * autosize-off = no cap (oracle-pinned); autosize = 256 — far above
+    * near-dup cliques (see Similarity.srpCandidatePairs). Autosize
+    * off: no cap (oracle-pinned); autosize on: 256 — far above
     * any random-collision bucket at the derived band width, so only
     * genuine mega-cliques (the skew sweep's 10⁴ clique: 391 s → linear)
     * take the star path.
     */
   def srpBucketCap(spark: SparkSession): Int =
-    knob(spark, "spark.graft.srp.bucketCap", Int.MaxValue)(256)
+    if (on(spark)) 256 else Int.MaxValue
 
   /** (srpBands, srpBits) for q305 margin mining; srpBands = 0 ⇒ brute. */
   def marginConf(spark: SparkSession, dir: String): (Int, Int) = {
-    val explicitBands = spark.conf.getOption("spark.graft.margin.bands")
-      .exists(_.trim.nonEmpty)
     val bands =
-      if (explicitBands) Rounds.posInt(spark, "spark.graft.margin.bands", 8)
-      else if (on(spark)) {
+      if (on(spark)) {
         // per-side counts: one bounded (≤ n_labels rows) aggregate probe
         val bySide = graft.Tables(spark, dir).embeddings
           .groupBy(org.apache.spark.sql.functions.col("label").cast("long").as("label"))
@@ -144,29 +134,25 @@ object Autosize {
       } else 0
     val bits =
       if (bands <= 0) 8
-      else knob(spark, "spark.graft.srp.bits", 8)(
-        srpBitsLaw(tableCount(spark, dir, "embeddings")))
+      else srpBitsLaw(tableCount(spark, dir, "embeddings"))
     (bands, bits)
   }
 
   /** k for the q176/q177 k-means family. */
   def kmeansConf(spark: SparkSession, dir: String): Int =
-    knob(spark, "spark.graft.kmeans.k", 8)(
-      kmeansKLaw(tableCount(spark, dir, "embeddings")))
+    knob(spark, 8)(kmeansKLaw(tableCount(spark, dir, "embeddings")))
 
   /** nBlocks for q98's pigeonhole banding. */
   def simhashConf(spark: SparkSession, dir: String): Int =
-    knob(spark, "spark.graft.simhash.blocks", 4)(
-      simhashBlocksLaw(tableCount(spark, dir, "documents")))
+    knob(spark, 4)(simhashBlocksLaw(tableCount(spark, dir, "documents")))
 
-  /** Coarse-centroid count for the q59/q267/q295 IVF family
-    * (`spark.graft.ivf.cells`). nprobe stays a fixed recall choice —
-    * the probe's read fraction nprobe/kc then SHRINKS as the corpus
-    * grows instead of staying pinned at nprobe/8. q59 (full probe,
+  /** Coarse-centroid count for the q59/q267/q295 IVF family. nprobe
+    * stays a fixed recall choice — the probe's read fraction nprobe/kc
+    * then SHRINKS as the corpus grows instead of staying pinned at
+    * nprobe/8. q59 (full probe,
     * nprobe = kc) is hash-identical at any kc — the exactness gate
     * certifies the path, not a particular index width.
     */
   def ivfConf(spark: SparkSession, dir: String): Int =
-    knob(spark, "spark.graft.ivf.cells", 8)(
-      ivfCellsLaw(tableCount(spark, dir, "embeddings")))
+    knob(spark, 8)(ivfCellsLaw(tableCount(spark, dir, "embeddings")))
 }

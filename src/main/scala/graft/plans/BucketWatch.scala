@@ -73,8 +73,7 @@ object BucketWatch {
                   warn(s"[graft] WARNING: an SRP bucket of $m members " +
                     s"expanded all-pairs (~${m * (m - 1) / 2} candidate " +
                     "rows in one band) under the default config; set " +
-                    "spark.graft.autosize=true (or " +
-                    "spark.graft.srp.bucketCap) to star-compress " +
+                    "spark.graft.autosize=true to star-compress " +
                     "oversized buckets")
                 }
               }

@@ -232,6 +232,17 @@ class DedupSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 8L -> 8L, 9L -> 8L))
   }
 
+  test("connectedComponents stops at its maxIters cap") {
+    // a 6-node path needs >1 min-propagation round past the warm start
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("left_id", "right_id")
+    val full = Dedup.connectedComponents(pairs).collect().map(_.getLong(1)).distinct
+    assert(full.toSeq == Seq(1L), "converged: one component labeled 1")
+    val capped = Dedup.connectedComponents(pairs, maxIters = 1)
+      .collect().map(_.getLong(1)).distinct
+    assert(capped.length > 1, "maxIters = 1 must stop before the fixpoint")
+  }
+
   test("nearDupClusters clusters exact duplicates end-to-end") {
     val docs = Seq(
       (1L, "a b c d e f g h"),
@@ -253,24 +264,7 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSeq
     assert(got == Seq((1L, 2L))) // once, despite 4 band collisions
   }
-  test("candidate-scoped verify produces identical clusters") {
-    val docs = Seq(
-      (1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
-      (5L, "a b c d e f g h"), (4L, "z y x w v u t s")
-    ).toDF("doc_id", "text")
-    val full = Dedup.nearDupClusters(docs, threshold = 0.2).collect().map(_.toString).toSeq
-    val scoped = Dedup.nearDupClusters(docs, threshold = 0.2,
-      scopeVerifyToCandidates = true).collect().map(_.toString).toSeq
-    assert(full == scoped)
-  }
-
-  test("minhashAccuracy: scoped == unscoped, and est is exact for identical docs") {
-    val docs = graft.Tables(spark, sf("")).documents.limit(120)
-    val scoped = Dedup.minhashAccuracy(docs, scopeToCandidates = true)
-      .collect().map(_.toString).toSeq
-    val unscoped = Dedup.minhashAccuracy(docs, scopeToCandidates = false)
-      .collect().map(_.toString).toSeq
-    assert(scoped == unscoped)
+  test("minhashAccuracy: est is exact for identical docs") {
     // identical texts: est and exact are both 1.0, error 0
     val twins = Seq((1L, "a b c d e f g"), (2L, "a b c d e f g")).toDF("doc_id", "text")
     val r = Dedup.minhashAccuracy(twins).as[(Long, Long, Double, Double, Double)].head()

@@ -103,21 +103,16 @@ class ScaleHeadroomSpec extends SparkSpec {
       "duplicating every label-0 vector must not move the mean query / max relevance")
   }
 
-  /** Size knobs from the sweep: k (k-means/SemDeDup) and SRP bit width
-    * reach the query surface through the session conf; the SRP recall
-    * contract (planted pairs recovered) holds at the wider setting.
+  /** Size parameters from the sweep: k (k-means/SemDeDup) and SRP bit
+    * width are behavior-bearing; the SRP recall contract (planted pairs
+    * recovered) holds at the wider setting.
     */
-  test("spark.graft.kmeans.k and spark.graft.srp.bits are wired and behavior-bearing") {
+  test("k-means k and SRP bit width are behavior-bearing parameters") {
     import spark.implicits._
     val emb = (0 until 40).map(i =>
       (i.toLong, i.toLong % 3, Array.tabulate(8)(d =>
         math.cos(0.7 * i + 1.3 * d).toFloat))).toDF("vec_id", "label", "embedding")
-    spark.conf.set("spark.graft.kmeans.k", "3")
-    try {
-      val k = graft.plans.Rounds.posInt(spark, "spark.graft.kmeans.k", 8)
-      assert(k == 3)
-      assert(Clustering.kmeansReport(emb, k = k).count() == 3)
-    } finally spark.conf.unset("spark.graft.kmeans.k")
+    assert(Clustering.kmeansReport(emb, k = 3).count() == 3)
     // wider bands shrink buckets but must keep the planted near-dups
     val narrow = Similarity.srpNearDupReport(emb, bands = 8, bitsPerBand = 4)
       .select("left_id", "right_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet

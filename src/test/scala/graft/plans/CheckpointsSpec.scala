@@ -90,4 +90,14 @@ class CheckpointsSpec extends SparkSpec {
       s"leaked persistent RDDs: ${after.diff(before)}")
     assert(t != null)
   }
+
+  test("q67 and q219 lineage cuts drain on release") {
+    Checkpoints.release(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (q <- Seq("q67_shard_packing", "q219_hierarchy_rollup"))
+      assert(graft.SparkEntry.queries(q)(spark, sf("")).collect().nonEmpty, q)
+    Checkpoints.release(spark)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after.subsetOf(before), s"leaked persistent RDDs: ${after.diff(before)}")
+  }
 }
