@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deduplication operators for the training-data-pipeline mandate: exact
   * (hash fingerprint groupBy), MinHash signatures + LSH band bucketing,
@@ -550,101 +551,168 @@ object Dedup extends QueryModule {
   }
 
   /** Connected components over an undirected pair list (left_id,
-    * right_id) by min-label propagation: labels start as each node's own
-    * id; every iteration each node takes the min of its own and its
-    * neighbors' labels (one shuffled join + aggregate) until a fixpoint.
-    * Returns (id, label) for every node that appears in some edge.
+    * right_id) of LongType ids: returns (id, label) for every node that
+    * appears in some edge, where label is the min id of its component.
+    *
+    * One loop with a driver finish. The FRONTIER is what the next
+    * round's neighbour-min join reads: the symmetric edge rows out of
+    * every node whose current label its neighbours have not seen yet,
+    * i.e. Σ deg over those nodes. Before any round (identity labels)
+    * that is every edge row. Once the frontier fits under
+    * `autoBroadcastJoinThreshold / 16` rows (16 bytes a row: the bytes a
+    * broadcast join would collect to the driver anyway), the loop
+    * collects it contracted to (label, label) pairs and finishes with a
+    * min-root union-find on the driver: the hybrid finish of Kiveris et
+    * al., "Connected Components in MapReduce and Beyond" (SoCC 2014).
+    * A graph under the bound from the start costs one cut and one
+    * collect and comes back as a local frame. A larger graph runs
+    * min-label rounds (change frontier + pointer jump, below) until
+    * the frontier fits, then hands over. A threshold ≤ 0 hands over
+    * only at an empty frontier, i.e. runs the rounds to their fixpoint.
+    * `maxIters` caps the distributed rounds.
+    *
+    * Measured negative (reports workload, 6 fresh-JVM pairs on a 4-core
+    * host): fusing neighbour-min and the pointer jump into one cut per
+    * round, with the change count read from `observe`, cut `exec.jobs`
+    * 83 → 70 but moved `wall_s` 5.21 → 5.30 s and q296 2,558 → 2,574 ms
+    * (2 of 6 pairs won): the fused plan's driver-side planning grew by
+    * as much as the jobs saved. The driver finish removes the rounds
+    * instead: `wall_s` 5.05 → 4.16 s (medians, 18 of 20 alternating
+    * pairs won), q296's construction 1,908 → 943 ms traced.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+    import graft.plans.Checkpoints
+    // the driver's Long order must be Spark's order for "min id" to agree
+    require(pairs.schema.fields.forall(_.dataType == LongType),
+      s"connectedComponents takes LongType ids, got ${pairs.schema.simpleString}")
+    val spark = pairs.sparkSession
+    val bound = math.max(spark.sessionState.conf.autoBroadcastJoinThreshold / 16, 0L)
     val edges = pairs.toDF("src", "dst")
-    val sym = graft.plans.Checkpoints.cut(
-      edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
-    // warm start at the 1-hop fixpoint candidate — min over self+neighbors
-    // (every node appears as dst in the symmetric list), which already IS
-    // the answer for pair-shaped components, the common near-dup case.
-    //
-    // Every round LINEAGE-CUTS the label frame (Checkpoints.cut), not
-    // just cache(): a cache leaves the logical plan intact, and since a
-    // round references the previous labels twice, the plan TREE doubles
-    // per iteration — on a long-chain component (q296's DBSCAN core
-    // graph at sf0.1 needs 10+ rounds) the 2^rounds tree OOMed the
-    // driver while merely STRINGIFYING the plan for the job description.
-    // The cut truncates the plan to a leaf each round, so round r's plan
-    // is O(1) regardless of r; blocks from superseded rounds unpersist
-    // immediately (node-sized, but why keep them), the rest drain via
-    // Checkpoints.release.
-    var labels = graft.plans.Checkpoints.cut(
-      sym.groupBy(col("dst").as("id")).agg(min(col("src")).as("m"))
-        .select(col("id"), least(col("id"), col("m")).as("label")))
-    // CHANGE FRONTIER (r12): only a node whose label just improved can
-    // improve a neighbor, so the edge-side neighbor-min join needs the
-    // DELTA rows, not the full label map — the standard monotone-min
-    // frontier argument (a node u that changed in round k is read by
-    // its neighbors in round k+1; initial round = every node, so every
-    // label is exposed exactly once after its last change; pointer-jump
-    // improvements re-enter the frontier like any other change, keeping
-    // the induction airtight). Late rounds then join the edge list
-    // against a SHRINKING materialized frame — and because the cut
-    // makes delta's true size visible, AQE flips the round's join to
-    // broadcast once the frontier is small, so the tail rounds stop
-    // shuffling the edge list entirely (q296's sf1 DBSCAN core graph:
-    // the first measured converged run spent its 45 s re-shuffling all
-    // edges every round; the frontier cut it to the rounds that carry
-    // information).
-    var delta = labels
+    val (sym, symRows) = Checkpoints.cutMeasured(
+      edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))),
+      count(lit(1)))
+    // labels: (id, label, deg), null while every label is its own id;
+    // delta: (id, label) of the nodes whose label the neighbours have
+    // not read; frontier = Σ deg over delta
+    var labels: DataFrame = null
+    var delta: DataFrame = null
+    var frontier = symRows.getLong(0)
+    if (frontier > bound) {
+      // warm start at the 1-hop fixpoint candidate — min over
+      // self+neighbors (every node appears as dst in the symmetric
+      // list), which already IS the answer for pair-shaped components.
+      // Every node is still in the frontier: its neighbours have not
+      // read the new label.
+      labels = Checkpoints.cut(
+        sym.groupBy(col("dst").as("id"))
+          .agg(min(col("src")).as("m"), count(lit(1)).as("deg"))
+          .select(col("id"), least(col("id"), col("m")).as("label"), col("deg")))
+      delta = labels.select("id", "label")
+    }
+    // Every round LINEAGE-CUTS its frames (Checkpoints.cut), not just
+    // cache(): a round references the previous labels twice, so an
+    // uncut plan TREE doubles per round — on a long-chain component the
+    // 2^rounds tree OOMed the driver while merely stringifying the plan.
+    // The cut makes round r's plan O(1); a superseded round's cuts are
+    // dropped as soon as the next round is materialized.
     var i = 0
-    var converged = false
-    while (!converged && i < maxIters) {
+    while (frontier > bound && i < maxIters) {
+      // CHANGE FRONTIER: only a node whose label just improved can
+      // improve a neighbor, so the neighbor-min join reads the DELTA
+      // rows, not the full label map (monotone-min induction: a node
+      // that changed in round k is read by its neighbors in round k+1;
+      // pointer-jump improvements re-enter the frontier like any other
+      // change). AQE sees delta's true size at the join's shuffle and
+      // flips it to broadcast once the frontier is small.
       val fromNeighbors = sym.join(delta, sym("src") === delta("id"))
         .groupBy(col("dst").as("id")).agg(min(col("label")).as("nlabel"))
-      // carry the old label through so convergence is checked against the
-      // SAME materialized frame the next round reads — the cut is eager,
-      // so `prop` is computed exactly once
-      val prop = graft.plans.Checkpoints.cut(
+      // carry the old label through so the change is measured against
+      // the SAME materialized frame the next round reads
+      val prop = Checkpoints.cut(
         labels.withColumnRenamed("label", "old")
           .join(fromNeighbors, Seq("id"), "left")
           .select(col("id"), col("old"),
-                  least(col("old"), coalesce(col("nlabel"), col("old"))).as("label")))
+                  least(col("old"), coalesce(col("nlabel"), col("old"))).as("label"),
+                  col("deg")))
       // POINTER JUMP (path halving): label ← min(label, label(label)).
       // Neighbor-min alone moves a label one hop per round, so rounds =
-      // component DIAMETER — q296's DBSCAN core graph at sf0.1 is an
-      // eps-chain with diameter > 20 and the capped loop returned an
-      // UNDER-MERGED labeling (caught by the r11 sf0.1 oracle pass).
-      // The jump doubles the lookahead each round → O(log diameter)
-      // rounds, so cap=20 covers diameters past 10⁶. A label is always
-      // the id of a node in the same component (init = self/neighbor
-      // min), so label-of-label stays in-component and the converged
-      // fixpoint — min id per component — is unchanged.
+      // component DIAMETER (q296's DBSCAN core graph at sf0.1 has
+      // diameter > 20, and the capped loop once returned an UNDER-
+      // MERGED labeling). The jump gives O(log diameter) rounds. A label
+      // is always the id of a node in the same component, so
+      // label-of-label stays in-component and the fixpoint is unchanged.
       val parents = prop.select(col("id").as("pid"), col("label").as("plabel"))
-      val next = graft.plans.Checkpoints.cut(
+      // the next frontier's size rides the cut's own job; it is 0
+      // exactly when no label changed (every node has deg ≥ 1), so it
+      // is also the convergence signal
+      val (next, stats) = Checkpoints.cutMeasured(
         prop.join(parents, prop("label") === parents("pid"), "left")
           .select(prop("id"), prop("old"),
-            least(prop("label"), coalesce(col("plabel"), prop("label"))).as("label")))
-      // the frontier is a narrow FILTER of the just-materialized `next`
-      // — leave it lazy instead of paying a third localCheckpoint job
-      // per round: its two consumers (the count here, next round's
-      // neighbor-min join) each re-scan next's cached blocks, which is
-      // cheaper than materializing a third copy, and AQE still sees the
-      // frontier's true size at the join's own shuffle stage, so the
-      // shrinking-frontier broadcast flip is preserved
-      val deltaNext = next.filter(col("label") =!= col("old")).select("id", "label")
-      val changed = deltaNext.count()
-      labels.unpersist(false)
-      prop.unpersist(false)
-      if (delta ne labels) delta.unpersist(false)
-      labels = next.select("id", "label")
-      delta = deltaNext
-      if (changed == 0L) converged = true else i += 1
+            least(prop("label"), coalesce(col("plabel"), prop("label"))).as("label"),
+            prop("deg")),
+        coalesce(sum(when(col("label") =!= col("old"), col("deg"))), lit(0L)))
+      Checkpoints.drop(labels)
+      Checkpoints.drop(prop)
+      labels = next.select("id", "label", "deg")
+      delta = next.filter(col("label") =!= col("old")).select("id", "label")
+      frontier = stats.getLong(0)
+      i += 1
     }
-    if (!converged) System.err.println(
-      s"[graft] connectedComponents stopped at maxIters=$maxIters before convergence")
-    // the cuts have materialized `labels`; the edge list and the final
-    // (empty-at-convergence) frontier are no longer needed (the final
-    // cut blocks back the returned frame and drain via
-    // Checkpoints.release once the caller is done)
-    if (delta ne labels) delta.unpersist(false)
-    sym.unpersist(false)
-    labels
+    if (frontier > bound) {
+      System.err.println(
+        s"[graft] connectedComponents stopped at maxIters=$maxIters before convergence")
+      Checkpoints.drop(sym)
+      return labels.select("id", "label")
+    }
+    // HAND-OVER. Invariant: every edge whose two labels differ has its
+    // smaller-label endpoint in delta. (A node outside delta had its
+    // label read by all its neighbours in an earlier round, and labels
+    // only fall, so no neighbour's label is above it.) The contracted
+    // frontier — (label(dst), label(src)) over src ∈ delta, labels
+    // unequal — therefore carries every merge still outstanding, and
+    // its union-find roots are min ids of components: the min id m of
+    // a component always has label m. Before any round, delta is every
+    // node and the pairs are the edges themselves (self-loops kept, so
+    // every node gets a root).
+    val contracted =
+      if (labels == null) sym.filter(col("src") <= col("dst"))
+      else sym.join(delta.select(col("id").as("src"), col("label").as("ls")), "src")
+        .join(labels.select(col("id").as("dst"), col("label").as("ld")), "dst")
+        .filter(col("ls") =!= col("ld"))
+        .select("ld", "ls").distinct()
+    val roots = minRoots(
+      if (frontier == 0L) Iterator.empty
+      else contracted.collect().iterator.map(r => (r.getLong(0), r.getLong(1))))
+    Checkpoints.drop(sym)
+    if (labels == null) spark.createDataFrame(roots.toSeq).toDF("id", "label")
+    else {
+      val moved = roots.toSeq.filter { case (l, r) => l != r }
+      if (moved.isEmpty) labels.select("id", "label")
+      else {
+        val rootOf = spark.createDataFrame(moved).toDF("from", "root")
+        labels.join(broadcast(rootOf), col("label") === col("from"), "left")
+          .select(col("id"), coalesce(col("root"), col("label")).as("label"))
+      }
+    }
+  }
+
+  /** Min-root union-find over driver-side pairs: node → the min id of
+    * its component, for every node of some pair. */
+  private def minRoots(pairs: Iterator[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.foreach(x => parent(x) = find(x))
+    parent
   }
 
   /** Chunk-level cross-document dedup (the scalable variant of

@@ -149,13 +149,12 @@ object GraphOps extends QueryModule {
         when(uFirst, col("u")).otherwise(col("v")).as("src"),
         when(uFirst, col("v")).otherwise(col("u")).as("dst"),
         when(uFirst, col("dv")).otherwise(col("du")).as("dd"))
-    val orientedCut = graft.plans.Checkpoints.cut(oriented)
-    // edge count for the strategy switch AND the n_edges report column —
-    // taken from the already-materialized orientedCut (same cardinality
-    // as the input: one oriented row per undirected edge), so a caller
-    // passing a COMPUTED frame (spec fixtures) never re-runs its build
-    // just to pick a counting strategy
-    val nEdges = orientedCut.count()
+    // edge count for the strategy switch, observed by the cut's own job
+    // (same cardinality as the input: one oriented row per undirected
+    // edge), so a caller passing a COMPUTED frame (spec fixtures) never
+    // re-runs its build just to pick a counting strategy
+    val (orientedCut, edgeStats) = graft.plans.Checkpoints.cutMeasured(oriented, count(lit(1)))
+    val nEdges = edgeStats.getLong(0)
     // FORWARD (edge-iterator) counting at every size: triangles =
     // Σ over oriented edges (a→b) of |N⁺(a) ∩ N⁺(b)|. The oriented
     // adjacency table is NODE-count-sized (total elements = m longs);
@@ -353,23 +352,25 @@ object GraphOps extends QueryModule {
     * 1..r−1.
     */
   def kCorePeel(und: DataFrame, k: Int = 3, rounds: Int = 4): DataFrame = {
-    var edges = graft.plans.Checkpoints.cut(und)
     // Early exit at the fixpoint: a round that removes no edge makes
     // every later round a no-op (peeling is monotone), so re-running
     // them would just re-materialize identical frames. Result-identical
-    // to the oracle's full unroll; the count is a cheap scan of the
-    // just-checkpointed blocks.
-    var prevEdges = edges.count()
+    // to the oracle's full unroll; each edge count rides its cut's job.
+    val (input, inputStats) = graft.plans.Checkpoints.cutMeasured(und, count(lit(1)))
+    var edges = input
+    var prevEdges = inputStats.getLong(0)
     var r = 0
     var stable = false
     while (r < rounds && !stable) {
       val deg = edges.select(col("u").as("n")).unionAll(edges.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select("n")
-      edges = graft.plans.Checkpoints.cut(
+      val (peeled, peeledStats) = graft.plans.Checkpoints.cutMeasured(
         edges.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-             .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi"))
-      val c = edges.count()
+             .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi"),
+        count(lit(1)))
+      edges = peeled
+      val c = peeledStats.getLong(0)
       stable = c == prevEdges
       prevEdges = c
       r += 1

@@ -2,7 +2,8 @@ package graft.plans
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage-breaking for iterative plans (CC rounds, PageRank, triangle
@@ -36,10 +37,11 @@ import org.apache.spark.storage.StorageLevel
   * Storage lifecycle. `localCheckpoint` pins its blocks for the session
   * lifetime — in a long-lived 100×-scale session those pinned blocks
   * accumulate until the unified-memory storage floor squeezes execution
-  * memory. Every local cut therefore REGISTERS the RDD it pinned, and
-  * iterative operators that `cache()` an intermediate consumed lazily by
-  * their RESULT plan (so an in-scope unpersist à la Dedup's CC loop is
-  * impossible) register it via [[pin]]. A harness calls
+  * memory. Every local cut therefore REGISTERS the RDD it pinned; an
+  * iterative operator frees a superseded round's cut in scope via
+  * [[drop]] (Dedup's CC loop), and one that `cache()`s an intermediate
+  * consumed lazily by its RESULT plan registers it via [[pin]]. A
+  * harness calls
   * [[release]] once the query's terminal consumer has run — Bench does
   * so between queries — and all graft-pinned storage drains. Releasing
   * makes the already-returned DataFrames non-recomputable (their lineage
@@ -70,9 +72,15 @@ object Checkpoints {
   private val pinnedRddIds = ConcurrentHashMap.newKeySet[Integer]()
   private val pinnedDatasets = new ConcurrentLinkedQueue[Dataset[_]]()
 
+  private val MetricPrefix = "graft_cut_"
+  private val nameCounter = new java.util.concurrent.atomic.AtomicLong()
+
+  private def disabled(spark: SparkSession): Boolean =
+    spark.conf.getOption(DisableConf).contains("true")
+
   def cut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    if (spark.conf.getOption(DisableConf).contains("true")) return df
+    if (disabled(spark)) return df
     spark.conf.getOption(DirConf).map(_.trim).filter(_.nonEmpty) match {
       case Some(d) =>
         val sc = spark.sparkContext
@@ -99,6 +107,37 @@ object Checkpoints {
         out
     }
   }
+
+  /** [[cut]] `df` and evaluate `metrics` (aggregate columns) over its
+    * rows: returns the cut and one row of the metric values. The
+    * aggregates ride the cut's own job as a `Dataset.observe` node
+    * (local and reliable paths alike), so "cut, then count()" costs one
+    * job, not two. Metric names are counter-suffixed so two measured
+    * cuts in one query tree never collide on Spark's unique-observed-
+    * name rule. A disabled cut runs no job, so it pays one explicit
+    * aggregate instead.
+    */
+  def cutMeasured(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    if (disabled(df.sparkSession))
+      return (df, df.agg(metrics.head, metrics.tail: _*).head())
+    val name = s"$MetricPrefix${nameCounter.incrementAndGet()}"
+    val observed = df.observe(name, metrics.head, metrics.tail: _*)
+    val out = cut(observed)
+    (out, observed.queryExecution.observedMetrics(name))
+  }
+
+  /** Unpersist the blocks of one local [[cut]] now, instead of at
+    * [[release]]: for an iterative operator's superseded rounds. `df`
+    * must be the frame [[cut]] returned (or a projection of it) and no
+    * live frame may still read it. `Dataset.unpersist` cannot do this —
+    * it only touches `CacheManager` entries, never a checkpoint's RDD.
+    * A reliable or disabled cut pinned nothing, so this is a no-op.
+    */
+  def drop(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
+      case r: LogicalRDD if pinnedRddIds.remove(r.rdd.id) => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Presentation sort over a BOUNDED (report-sized) result: materialize
     * the frame with [[cut]], THEN apply the global orderBy. A global

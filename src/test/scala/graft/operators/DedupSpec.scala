@@ -238,9 +238,48 @@ class DedupSpec extends SparkSpec {
       .toDF("left_id", "right_id")
     val full = Dedup.connectedComponents(pairs).collect().map(_.getLong(1)).distinct
     assert(full.toSeq == Seq(1L), "converged: one component labeled 1")
-    val capped = Dedup.connectedComponents(pairs, maxIters = 1)
+    // the cap bounds DISTRIBUTED rounds; at the default threshold this
+    // graph finishes on the driver before any round, so pin the rounds
+    // (Spark's own broadcast conf, -1 = finish only at the fixpoint)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val capped = try Dedup.connectedComponents(pairs, maxIters = 1)
       .collect().map(_.getLong(1)).distinct
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert(capped.length > 1, "maxIters = 1 must stop before the fixpoint")
+  }
+
+  private val chain64 = (0L until 63L).map(i => (i, i + 1))
+
+  test("connectedComponents finishes a broadcast-sized graph in at most 2 jobs") {
+    // the symmetric-edge cut (its row count observed in the same job)
+    // and one collect for the driver union-find; no rounds, no counts
+    val pairs = chain64.toDF("left_id", "right_id")
+    var labels: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf { labels = Dedup.connectedComponents(pairs) }
+    assert(jobs <= 2, s"CC on a 64-node chain ran $jobs jobs")
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      (0L to 63L).map(_ -> 0L).toMap)
+  }
+
+  test("connectedComponents rounds leave at most 2 pinned RDDs behind") {
+    // superseded rounds' cuts are dropped in the loop, not at release
+    graft.plans.Checkpoints.release(spark)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val left = try {
+      val labels = Dedup.connectedComponents(chain64.toDF("left_id", "right_id"))
+      assert(labels.as[(Long, Long)].collect().forall(_._2 == 0L))
+      sc.getPersistentRDDs.keySet.diff(before)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(left.size <= 2, s"CC left ${left.size} persistent RDDs: $left")
+    graft.plans.Checkpoints.release(spark)
+  }
+
+  test("connectedComponents takes LongType ids only") {
+    intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(Seq((1, 2)).toDF("left_id", "right_id"))
+    }
   }
 
   test("nearDupClusters clusters exact duplicates end-to-end") {

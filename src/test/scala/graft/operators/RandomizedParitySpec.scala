@@ -14,8 +14,24 @@ import scala.util.Random
 class RandomizedParitySpec extends SparkSpec {
   import spark.implicits._
 
+  /** Run `body` at the three sides of CC's driver-finish bound for a
+    * graph of `nEdges` input pairs: the default threshold (finish before
+    * any round), -1 (distributed rounds to the fixpoint), and one row
+    * under the symmetric edge list (hand-over after the first round,
+    * which always leaves some node's label unchanged).
+    */
+  private def atEveryFinish(nEdges: Int)(body: String => Unit): Unit = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    for (t <- Seq(None, Some("-1"), Some((16L * (2 * nEdges - 1)).toString))) {
+      t.foreach(spark.conf.set(key, _))
+      try body(s"threshold=${t.getOrElse("default")}")
+      finally spark.conf.unset(key)
+    }
+  }
+
   test("connectedComponents matches union-find on random graphs") {
-    // 3 seeds: each run pays the driver-loop fixpoint, the slow part here
+    // 3 seeds × 3 finish points: each distributed run pays the
+    // driver-loop rounds, the slow part here
     for (seed <- 1 to 3) {
       val rnd = new Random(seed)
       val n = 30
@@ -34,9 +50,11 @@ class RandomizedParitySpec extends SparkSpec {
         val members = nodes.filter(u => find(u.toInt) == find(v.toInt))
         v -> members.min
       }.toMap
-      val got = Dedup.connectedComponents(edges.toDF("left_id", "right_id"))
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"seed=$seed edges=$edges")
+      atEveryFinish(edges.size) { at =>
+        val got = Dedup.connectedComponents(edges.toDF("left_id", "right_id"))
+          .as[(Long, Long)].collect().toMap
+        assert(got == expected, s"seed=$seed $at edges=$edges")
+      }
     }
   }
 
@@ -47,14 +65,18 @@ class RandomizedParitySpec extends SparkSpec {
     // also the worst case for label correctness (every node but one
     // relabels)
     val chain = (0L until 63L).map(i => (i, i + 1))
-    val got = Dedup.connectedComponents(chain.toDF("left_id", "right_id"), maxIters = 12)
-      .as[(Long, Long)].collect().toMap
-    assert(got.size == 64 && got.values.forall(_ == 0L))
+    atEveryFinish(chain.size) { at =>
+      val got = Dedup.connectedComponents(chain.toDF("left_id", "right_id"), maxIters = 12)
+        .as[(Long, Long)].collect().toMap
+      assert(got.size == 64 && got.values.forall(_ == 0L), at)
+    }
     // two chains + a singleton pair keep separate labels
     val two = chain ++ (100L until 110L).map(i => (i, i + 1)) ++ Seq((500L, 501L))
-    val got2 = Dedup.connectedComponents(two.toDF("l", "r"), maxIters = 12)
-      .as[(Long, Long)].collect().toMap
-    assert(got2(63L) == 0L && got2(110L) == 100L && got2(501L) == 500L)
+    atEveryFinish(two.size) { at =>
+      val got2 = Dedup.connectedComponents(two.toDF("l", "r"), maxIters = 12)
+        .as[(Long, Long)].collect().toMap
+      assert(got2(63L) == 0L && got2(110L) == 100L && got2(501L) == 500L, at)
+    }
   }
 
   test("asOfJoin matches a per-row scan on random event streams") {

@@ -100,4 +100,45 @@ class CheckpointsSpec extends SparkSpec {
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(after.subsetOf(before), s"leaked persistent RDDs: ${after.diff(before)}")
   }
+
+  test("cutMeasured observes df.count() on the local, reliable and disabled paths") {
+    val narrow = spark.range(1000).toDF("x").filter(col("x") % 3 === 0)
+    val shuffled = spark.range(1000).groupBy((col("id") % 7).as("k")).count()
+    def check(path: String): Unit = for (df <- Seq(narrow, shuffled)) {
+      val (out, stats) = Checkpoints.cutMeasured(df, count(lit(1)), sum(lit(1L)))
+      assert(stats.getLong(0) == df.count() && stats.getLong(1) == df.count(), path)
+      assert(out.count() == df.count(), path)
+    }
+    check("local")
+    // the observed count rides the cut's job: no job beyond the cut's own
+    assert(jobsOf(Checkpoints.cutMeasured(narrow, count(lit(1)))) ==
+      jobsOf(Checkpoints.cut(narrow)))
+    val dir = Files.createTempDirectory("graft-ckpt").toFile
+    spark.conf.set(Checkpoints.DirConf, dir.getAbsolutePath)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
+    }
+    try check("reliable") finally { spark.conf.unset(Checkpoints.DirConf); rm(dir) }
+    spark.conf.set(Checkpoints.DisableConf, "true")
+    try check("disabled") finally spark.conf.unset(Checkpoints.DisableConf)
+    Checkpoints.release(spark)
+  }
+
+  test("drop unpersists one local cut now; release has nothing left of it") {
+    Checkpoints.release(spark)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val keep = Checkpoints.cut(spark.range(10).toDF("x"))
+    val gone = Checkpoints.cut(spark.range(20).toDF("x"))
+    val pinned = sc.getPersistentRDDs.keySet.diff(before)
+    assert(pinned.size == 2)
+    // a frame's own unpersist is a no-op on a checkpoint's RDD
+    gone.select("x").unpersist(blocking = true)
+    assert(sc.getPersistentRDDs.keySet.diff(before) == pinned)
+    Checkpoints.drop(gone.select("x"))
+    assert(sc.getPersistentRDDs.keySet.diff(before).size == 1)
+    assert(keep.count() == 10L)
+    Checkpoints.release(spark)
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty)
+  }
 }
