@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Shared measurement methodology for Bench and Profile: execute the
@@ -43,6 +44,11 @@ object Bench {
     // round-9 lesson: two full runs 446 s vs 371 s apart on ambient load
     // are indistinguishable unless the artifact carries the attempt set
     val attemptLog = scala.collection.mutable.Map.empty[String, List[Double]]
+    // classes each attempt compiled (Spark's JVM-global CodegenMetrics
+    // delta): nonzero on a re-timed attempt means the codegen cache
+    // evicted the query's classes in between
+    val compileLog = scala.collection.mutable.Map.empty[String, List[Long]]
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def loadavg(): String =
       try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").trim
@@ -56,6 +62,7 @@ object Bench {
     val timeoutSec = sys.env.get("SPARK_GRAFT_TIMEOUT_SEC").map(_.toLong)
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
+      val c0 = compiles()
       // a failed query must NOT masquerade as a fast one: record a
       // negative sentinel and keep it out of the total (named on stderr
       // so a scale sweep's failures are diagnosable from the log). The
@@ -97,6 +104,7 @@ object Bench {
       // in-run inflation; see the periodicGC comment in GraftSession.local)
       System.gc()
       attemptLog(name) = attemptLog.getOrElse(name, Nil) :+ t
+      compileLog(name) = compileLog.getOrElse(name, Nil) :+ (compiles() - c0)
       System.err.println(f"[bench] $name ${t}%.2f s")
       t
     }
@@ -179,7 +187,8 @@ object Bench {
     }
     // richer sibling artifact (separate file so the history regex above
     // and the driver's one-line parse never see nested objects): every
-    // attempt per query plus {attempts, min, median} and the host's
+    // attempt per query (its time and `codegen_compiles`) plus
+    // {attempts, min, median} and the host's
     // loadavg at start/end — the provenance that makes two diverging
     // full runs adjudicable from the artifacts alone
     try {
@@ -191,6 +200,7 @@ object Bench {
           else if (ok.size % 2 == 1) ok(ok.size / 2)
           else (ok(ok.size / 2 - 1) + ok(ok.size / 2)) / 2
         s"""\"$name\":{"attempts":${all.size},"times":[${all.map(d).mkString(",")}],""" +
+          s""""codegen_compiles":[${compileLog.getOrElse(name, Nil).mkString(",")}],""" +
           s""""min":${d(if (ok.isEmpty) -1.0 else ok.head)},"median":${d(med)},""" +
           s""""reported":${d(reported)}}"""
       }.mkString("{", ",", "}")

@@ -16,7 +16,12 @@ import org.apache.spark.sql.SparkSession
   *    without a [[GraftFunctions.register]] call;
   *  - the Spark UI off: no entry point reads it, and every session
   *    would otherwise start its own Jetty server;
-  *  - periodic ContextCleaner GC every 2 min (below).
+  *  - periodic ContextCleaner GC every 2 min (below);
+  *  - generated code kept resident: Spark's codegen cache sized to the
+  *    engine's working set ([[CodegenCacheEntries]]) and whole-stage
+  *    classes named without their stage id (below), so a session that
+  *    repeats its queries or ingest operations compiles no class in the
+  *    steady state.
   *
   * On a cluster the same SQL-level knobs apply with master and deploy
   * settings coming from spark-submit. There `spark.sql.shuffle.partitions`
@@ -28,6 +33,24 @@ import org.apache.spark.sql.SparkSession
   * stats allow.
   */
 object GraftSession {
+
+  /** Entries of `CodeGenerator`'s compiled-class cache (the static conf
+    * `spark.sql.codegen.cache.maxEntries`, default 100). The cache is
+    * JVM-global, sized once at its first use, and evicts least recently
+    * used: a session that cycles through more distinct generated classes
+    * than it holds misses on nearly every access and recompiles each
+    * class every time. Distinct classes, counted with Spark's
+    * `CodegenMetrics` under an unbounded cache: the perfbench `reports`
+    * round ~211 (warm-up included) and `ingest_api` ~129, so at 100 a
+    * steady-state `reports` round recompiled ~135 classes (q296 alone
+    * 70) and an `ingest_api` round 55-70. 1,024 holds either workload
+    * about five times over. One pass of the full 349-query `graft.Bench`
+    * at sf0.01 compiles 4,424 distinct classes (warm-up excluded), so
+    * that pass does not fit: its queries run once each, and a re-timed
+    * attempt may compile its classes again (`codegen_compiles` in the
+    * Bench detail JSON shows it).
+    */
+  val CodegenCacheEntries = 1024
 
   /** A `local[cores]` session with `cores` shuffle partitions. `cores`
     * defaults to `SPARK_GRAFT_CPUS` when set, else the JVM's processor
@@ -58,6 +81,17 @@ object GraftSession {
       // GC policy — within graft every entry point shares it, so
       // round-over-round comparisons are unaffected.
       .config("spark.cleaner.periodicGC.interval", "2min")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // The codegen cache is keyed on the generated source, and a
+      // whole-stage class is named after its stage id. Under AQE the ids
+      // follow the order in which query stages are created, which follows
+      // the order their inputs finish, so one stage's code gets a
+      // different id from run to run and is compiled again. Named without
+      // the id, every such stage is one cache entry: on the perfbench
+      // `reports` workload (seed 1) the steady-state rounds went from
+      // 26 and 4 compiles (all q296) to 0 and 0. The id stays in the
+      // source's `codegenStageId` comment and in `explain` output.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

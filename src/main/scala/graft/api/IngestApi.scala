@@ -26,11 +26,12 @@ object IngestApi {
 
   /** request_ingest: dedup on run_id, then the §3.1 end-to-end slice.
     * `processedRunIds` is the caller-owned store of completed run ids
-    * (one column `run_id`).
+    * (one column `run_id`); the probe is an `isEmpty`, which fires no
+    * job when the store is a local relation.
     */
   def requestIngest(spark: SparkSession, runId: String, dir: String, datasetId: String,
                     processedRunIds: DataFrame): IngestAck = {
-    val seen = processedRunIds.filter(col("run_id") === runId).limit(1).count() > 0
+    val seen = !processedRunIds.filter(col("run_id") === runId).isEmpty
     if (seen) IngestAck(runId, accepted = false, result = None)
     else IngestAck(runId, accepted = true,
       result = Some(IngestSlice.run(spark, dir, datasetId)))

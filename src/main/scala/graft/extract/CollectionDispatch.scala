@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * dispatch — ordered by `match_priority` descending, first matcher
   * whose structural test passes wins. The reference probes the
   * filesystem with globs per candidate class; here a matcher is a set of
-  * `exists` aggregations over the (already-distributed) file-listing
-  * DataFrame, so dispatch is one pass over the catalog, not N directory
-  * walks.
+  * regex counts over the file listing, so dispatch is one pass over the
+  * catalog, not N directory walks: over one dataset's collected listing
+  * on the driver ([[dispatch]]), or as aggregations per dataset over a
+  * distributed listing ([[dispatchAll]]).
   */
 object CollectionDispatch {
 
@@ -73,23 +74,23 @@ object CollectionDispatch {
       requiredPatterns = Seq("^test\\.yml$")),
   )
 
-  /** Dispatch one dataset's file listing (column `rel_path`) to the
-    * highest-priority matching collection type; "unrecognized" if none
-    * match. One aggregation pass evaluates every matcher's globs.
-    */
-  def dispatch(listing: DataFrame,
-               matchers: Seq[CollectionMatcher] = defaultMatchers): String = {
-    // one distributed pass: count matches per pattern
-    val patterns = matchers.flatMap(m =>
+  /** Every regex the matchers test, each once. */
+  private def patternsOf(matchers: Seq[CollectionMatcher]): Seq[String] =
+    matchers.flatMap(m =>
       m.requiredPatterns ++ m.countPattern.map(_._1).toSeq ++
         m.maxPattern.map(_._1).toSeq).distinct
-    val aggs = patterns.zipWithIndex.map { case (p, i) =>
-      sum(when(col("rel_path").rlike(p), 1L).otherwise(0L)).as(s"p$i")
-    }
-    val row = listing.agg(aggs.head, aggs.tail: _*).collect()(0)
-    // sum() over zero rows is null — an empty listing matches nothing
-    val counts = patterns.zipWithIndex.map { case (p, i) =>
-      p -> (if (row.isNullAt(i)) 0L else row.getLong(i))
+
+  /** Dispatch one dataset's file listing (its `rel_path`s, already on
+    * the driver) to the highest-priority matching collection type;
+    * "unrecognized" if none match. A path matches a pattern as under
+    * Spark's `rlike` (`Pattern.matcher(path).find(0)`), which
+    * [[dispatchAll]] evaluates per dataset.
+    */
+  def dispatch(relPaths: Seq[String],
+               matchers: Seq[CollectionMatcher] = defaultMatchers): String = {
+    val counts = patternsOf(matchers).map { p =>
+      val re = java.util.regex.Pattern.compile(p)
+      p -> relPaths.count(re.matcher(_).find(0)).toLong
     }.toMap
     matchers.sortBy(-_.priority).find { m =>
       m.requiredPatterns.forall(p => counts(p) > 0) &&
@@ -105,9 +106,7 @@ object CollectionDispatch {
     */
   def dispatchAll(listing: DataFrame,
                   matchers: Seq[CollectionMatcher] = defaultMatchers): DataFrame = {
-    val patterns = matchers.flatMap(m =>
-      m.requiredPatterns ++ m.countPattern.map(_._1).toSeq ++
-        m.maxPattern.map(_._1).toSeq).distinct
+    val patterns = patternsOf(matchers)
     val aggs = patterns.zipWithIndex.map { case (p, i) =>
       sum(when(col("rel_path").rlike(p), 1L).otherwise(0L)).as(s"p$i")
     }

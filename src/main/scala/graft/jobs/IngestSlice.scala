@@ -13,10 +13,12 @@ import scala.jdk.CollectionConverters._
   * a generic metadata.tsv dataset — scan (S1) → dispatch (S14) → parse +
   * validate (S2/S4/V2) → envelope (+schema check) → route (J5) → status
   * event. The upload is listed once and its envelope built once: on
-  * `fixture_generic` one request runs 9 Spark jobs (the scan's collect,
-  * dispatch's two, three metadata.tsv reads, the contributors header and
-  * the envelope's shuffle and result; it was 29 when each stage re-ran
-  * the scan). Later stages plan over the collected listing as a local
+  * `fixture_generic` one request runs 6 Spark jobs (the scan's collect,
+  * the metadata.tsv header and rows, the contributors header and the
+  * envelope's shuffle and result; it was 29 when each stage re-ran the
+  * scan). Later stages work from what the driver already holds:
+  * dispatch and the V2 rules run over the collected listing and
+  * metadata rows, and the envelope plans over the listing as a local
   * relation, not by re-listing the tree (vs the reference's per-stage
   * YAML/XCom handoffs).
   */
@@ -55,21 +57,22 @@ object IngestSlice {
     val files = scanned.collect()
     val listing = spark.createDataFrame(files.toSeq.asJava, scanned.schema)
       .withColumn("dataset_id", lit(datasetId))
+    val relPaths = files.map(_.getAs[String]("rel_path")).toSeq
     // S14: priority dispatch
-    val collectionType = CollectionDispatch.dispatch(listing)
+    val collectionType = CollectionDispatch.dispatch(relPaths)
     // S2/S4 + V2: metadata parse + structural validation; with several
     // *metadata.tsv files the lexicographically first one is read
-    val metadataPath = files.map(_.getAs[String]("rel_path"))
-      .filter(metadataFile.matcher(_).find()).sorted.headOption.map(p => s"$dir/$p")
+    val metadataPath = relPaths.filter(metadataFile.matcher(_).find()).sorted.headOption
+      .map(p => s"$dir/$p")
     val (mdColumns, mdRows, violationList) = metadataPath match {
       case Some(p) =>
-        val (md, violations) = Readers.metadataTsv(spark, p)
+        val md = Readers.tsv(spark, p)
         val rows = md.collect().toSeq
         val rowCount =
           if (rows.length > 1) Seq(s"row_count: metadata.tsv has ${rows.length} data rows, expected 1")
           else Nil
         (md.columns.toSeq, rows,
-          violations.collect().map(r => s"${r.getString(0)}: ${r.getString(1)}").toSeq ++ rowCount)
+          Readers.metadataViolations(md, rows).map { case (rule, detail) => s"$rule: $detail" } ++ rowCount)
       case None => (Nil, Nil, Seq("required_file: metadata.tsv missing"))
     }
     // routing, contributors_path and the envelope's metadata all come

@@ -8,11 +8,15 @@ import org.apache.spark.sql.functions._
   *
   * The reference walks directories on one node (`os.walk`,
   * utils.py:717-767) and tags/annotates each file with first-match regex
-  * loops (utils.py:91-203). Here the listing itself is distributed:
-  * Spark's `binaryFile` source parallelizes the recursive enumeration
-  * across executors and prunes the `content` column away when only
-  * metadata is selected — at 100 TB the scan reads directory metadata,
-  * never file bytes.
+  * loops (utils.py:91-203). Here the listing is Spark's `binaryFile`
+  * source, which prunes the `content` column away when only metadata is
+  * selected, so the scan reads directory metadata, never file bytes.
+  * For one upload root `InMemoryFileIndex` lists on the driver: it lists
+  * as a distributed job only above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths,
+  * and a traced `ingest_api` run shows no listing job
+  * (`sources.FileCatalog.jobs` = 0). Tagging and annotation are
+  * per-row projections over the listing.
   */
 object FileCatalog {
 
@@ -35,8 +39,8 @@ object FileCatalog {
       .otherwise("unknown")
 
   /** S1: recursive scan of `root` → FileRecord rows
-    * (rel_path, type, size, modified). Listing is executor-parallel;
-    * only parquet-style metadata columns are read.
+    * (rel_path, type, size, modified). Only file metadata is read; the
+    * listing itself runs on the driver (see the object doc).
     */
   def scan(spark: SparkSession, root: String): DataFrame = {
     val rootNorm = new java.io.File(root.stripSuffix("/")).getAbsolutePath

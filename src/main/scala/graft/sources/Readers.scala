@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.sources.SimpleYaml
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -55,25 +55,34 @@ object Readers {
   /** S4/V2 (generic_metadatatsv_data_collection.py:81-88): metadata.tsv
     * reader + required-column structural validation. Returns the data
     * plus a violations DataFrame (rule, detail) instead of throwing
-    * (SURVEY.md §1.3).
+    * (SURVEY.md §1.3). The file's rows are collected for
+    * [[metadataViolations]]: a metadata.tsv holds one row per dataset.
     */
   def metadataTsv(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
     import spark.implicits._
     val df = tsv(spark, path)
-    val cols = df.columns.toSet
+    (df, metadataViolations(df, df.collect().toSeq).toDF("rule", "detail"))
+  }
+
+  /** The V2 rules over a metadata.tsv frame's header and its collected
+    * `rows`, as (rule, detail): required columns, delimiter sanity, and
+    * per row a `tissue_id` that must start with `<donor_id>-` (a row
+    * missing either is not checked).
+    */
+  def metadataViolations(md: DataFrame, rows: Seq[Row]): Seq[(String, String)] = {
+    val cols = md.columns.toSet
     val violations = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     if (!cols.contains("assay_type") && !cols.contains("dataset_type"))
       violations += (("required_column", "one of assay_type|dataset_type missing"))
     if (!cols.contains("data_path")) violations += (("required_column", "data_path missing"))
     if (!cols.contains("contributors_path")) violations += (("required_column", "contributors_path missing"))
-    tsvDelimiterViolations(df).foreach(m => violations += (("delimiter", m)))
-    val rowViolations =
-      if (cols.contains("tissue_id") && cols.contains("donor_id"))
-        df.filter(!col("tissue_id").startsWith(concat(col("donor_id"), lit("-"))))
-          .select(lit("tissue_id_prefix").as("rule"),
-                  concat(lit("tissue_id "), col("tissue_id"), lit(" !startswith "), col("donor_id")).as("detail"))
-      else spark.emptyDataset[(String, String)].toDF("rule", "detail")
-    (df, violations.toSeq.toDF("rule", "detail").unionByName(rowViolations))
+    tsvDelimiterViolations(md).foreach(m => violations += (("delimiter", m)))
+    if (cols.contains("tissue_id") && cols.contains("donor_id")) rows.foreach { r =>
+      val (tissue, donor) = (r.getAs[String]("tissue_id"), r.getAs[String]("donor_id"))
+      if (tissue != null && donor != null && !tissue.startsWith(donor + "-"))
+        violations += (("tissue_id_prefix", s"tissue_id $tissue !startswith $donor"))
+    }
+    violations.toSeq
   }
 
   /** S5: whole-doc JSON (multiLine) — one row per document. */

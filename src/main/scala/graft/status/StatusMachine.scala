@@ -1,8 +1,12 @@
 package graft.status
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** Status state machine (SURVEY.md §1.1, §2.8 V5; status_utils.py:50-127
   * `Statuses`/`ENTITY_STATUS_MAP`, status_manager.py:194-381
@@ -70,13 +74,37 @@ object StatusMachine {
   /** Stamp a raw event batch (uuid, entity_type, status) with event-store
     * metadata: the write path appends (ts, seq) so the read path can
     * resolve latest-wins deterministically. `ts` is caller-provided
-    * (job event time, not wall clock) for reproducible folds.
+    * (job event time, not wall clock) for reproducible folds; `seq`
+    * numbers the rows from `seqStart` in (uuid, entity_type, status)
+    * order.
+    *
+    * The batch is one request's events, bounded by the request: the rows
+    * of one `update_status` call, or one upload plus the children of its
+    * metadata.tsv. So it is collected, ordered on the driver as Spark
+    * orders strings (UTF-8 byte order, nulls first) and returned as a
+    * local relation carrying `ts` and `seq` as data. A `lit(ts)` over a
+    * non-local batch (a cached set, a frozen CSV) would inline the long
+    * into generated code: one new class per timestamp. No global window
+    * runs either.
     */
-  def stampEvents(batch: DataFrame, tsMicros: Long, seqStart: Long = 0L): DataFrame =
-    batch
-      .withColumn("ts", lit(tsMicros))
-      .withColumn("seq", lit(seqStart) + row_number().over(
-        Window.orderBy("uuid", "entity_type", "status")) - 1)
+  def stampEvents(batch: DataFrame, tsMicros: Long, seqStart: Long = 0L): DataFrame = {
+    val Seq(u, e, st) = Seq("uuid", "entity_type", "status").map(batch.schema.fieldIndex)
+    val rows = batch.collect().toSeq
+      .sortBy(r => (r.getString(u), r.getString(e), r.getString(st)))(
+        Ordering.Tuple3(sparkStringOrder, sparkStringOrder, sparkStringOrder))
+    val stamped = rows.zipWithIndex.map { case (r, i) =>
+      Row.fromSeq(r.toSeq ++ Seq(tsMicros, seqStart + i))
+    }
+    val schema = batch.schema
+      .add(StructField("ts", LongType, nullable = false))
+      .add(StructField("seq", LongType, nullable = false))
+    batch.sparkSession.createDataFrame(stamped.asJava, schema)
+  }
+
+  /** Spark's ascending `StringType` order: UTF-8 byte order, nulls first. */
+  private val sparkStringOrder: Ordering[String] =
+    Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0))
+      .on(s => Option(s).map(UTF8String.fromString))
 
   /** Append-only event-store schema: (uuid, entity_type, status, ts
     * [, seq]). Current status = latest-wins window (W3); `seq` breaks
@@ -92,27 +120,30 @@ object StatusMachine {
       .select(col("uuid"), col("entity_type"), col("status"), col("ts").as("since"))
   }
 
+  /** Whether a request row's (entity_type, status) is legal, as one
+    * expression over [[legalStatuses]]; false, not null, when either is
+    * null.
+    */
+  private val isLegal: Column =
+    coalesce(legalStatuses.toSeq.map { case (e, ss) =>
+      col("entity_type") === e.name && col("status").isin(ss.toSeq.map(_.name): _*)
+    }.reduce(_ || _), lit(false))
+
   /** Validate a batch of requested status events against the current
     * view: returns (accepted, rejected-with-reason). Mirrors the
     * reference's guard rails as set logic instead of per-row HTTP.
+    * Legality depends on the request alone, so `rejected` never reads
+    * `current`.
     */
   def validateBatch(spark: SparkSession, requested: DataFrame, current: DataFrame): (DataFrame, DataFrame) = {
-    // .toSeq first: flatMap on the Map would rebuild a Map and silently
-    // dedupe (entity_type → one status)
-    val legal = legalStatuses.toSeq.flatMap { case (e, ss) => ss.toSeq.map(s => (e.name, s.name)) }
-    import spark.implicits._
-    val legalDf = legal.toDF("entity_type", "status")
     val req = requested.withColumn("status", lower(trim(col("status"))))
-    val cur = current.select(col("uuid"), col("status").as("current_status"))
-    val joined = req.join(broadcast(legalDf.withColumn("is_legal", lit(true))),
-        Seq("entity_type", "status"), "left")
-      .join(cur, Seq("uuid"), "left")
-    val rejected = joined.filter(col("is_legal").isNull)
+    val rejected = req.filter(!isLegal)
       .select(col("uuid"), col("status"),
               concat(lit("illegal status for "), col("entity_type")).as("reason"))
-    val accepted = joined.filter(col("is_legal").isNotNull &&
-        (col("current_status").isNull || col("current_status") =!= col("status")))
-      .drop("is_legal", "current_status")
+    val cur = current.select(col("uuid"), col("status").as("current_status"))
+    val accepted = req.filter(isLegal).join(cur, Seq("uuid"), "left")
+      .filter(col("current_status").isNull || col("current_status") =!= col("status"))
+      .drop("current_status")
     (accepted, rejected)
   }
 }

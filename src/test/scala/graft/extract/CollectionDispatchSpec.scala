@@ -6,24 +6,25 @@ import graft.sources.FileCatalog
 class CollectionDispatchSpec extends SparkSpec {
   import spark.implicits._
 
+  private def relPaths(dir: String): Seq[String] =
+    FileCatalog.scan(spark, dir).select("rel_path").as[String].collect().toSeq
+
   test("generic metadata.tsv dir dispatches to generic_metadatatsv") {
-    val listing = FileCatalog.scan(spark, "src/test/resources/fixture_generic")
-    assert(CollectionDispatch.dispatch(listing) == "generic_metadatatsv")
+    assert(CollectionDispatch.dispatch(relPaths("src/test/resources/fixture_generic")) ==
+      "generic_metadatatsv")
   }
 
   test("devtest dir dispatches to devtest") {
-    val listing = FileCatalog.scan(spark, "src/test/resources/fixture_devtest")
-    assert(CollectionDispatch.dispatch(listing) == "devtest")
+    assert(CollectionDispatch.dispatch(relPaths("src/test/resources/fixture_devtest")) == "devtest")
   }
 
   test("two -metadata.tsv files dispatch to multiassay (priority beats generic)") {
-    val listing = Seq("rna-metadata.tsv", "atac-metadata.tsv", "data/x.bin").toDF("rel_path")
-    assert(CollectionDispatch.dispatch(listing) == "multiassay_metadatatsv")
+    assert(CollectionDispatch.dispatch(Seq("rna-metadata.tsv", "atac-metadata.tsv", "data/x.bin")) ==
+      "multiassay_metadatatsv")
   }
 
   test("empty listing dispatches to unrecognized (no NPE)") {
-    val empty = Seq.empty[String].toDF("rel_path")
-    assert(CollectionDispatch.dispatch(empty) == "unrecognized")
+    assert(CollectionDispatch.dispatch(Seq.empty) == "unrecognized")
   }
 
   test("dispatchAll routes many datasets in one pass") {
@@ -42,7 +43,7 @@ class CollectionDispatchSpec extends SparkSpec {
       "d4" -> "generic_metadatatsv")) // single metadata.tsv beats akoya priority
   }
   test("the full reference ladder: epic, generic shadowing, stanford, ims") {
-    def d(paths: String*) = CollectionDispatch.dispatch(paths.toSeq.toDF("rel_path"))
+    def d(paths: String*) = CollectionDispatch.dispatch(paths)
     // epic: metadata.tsv + derived/<dir>/ files beats generic (2.1 > 2.0)
     assert(d("sample-metadata.tsv", "derived/imgset1/a.ome.tiff") == "epic_metadata")
     // faithful shadowing: ONE metadata.tsv -> generic (2.0) wins even
@@ -61,5 +62,30 @@ class CollectionDispatchSpec extends SparkSpec {
     // a directory containing ONLY a dashed metadata.tsv: generic and
     // metadatatsv both match; generic wins on priority
     assert(d("only-metadata.tsv") == "generic_metadatatsv")
+  }
+
+  test("driver dispatch agrees with dispatchAll's Spark rlike on every ladder rung") {
+    val listings = Seq(
+      Seq("my-metadata.tsv"),
+      Seq("rna-metadata.tsv", "atac-metadata.tsv", "data/x.bin"),
+      Seq("sample-metadata.tsv", "derived/imgset1/a.ome.tiff"),
+      Seq("x-metadata.tsv", "extrametadata.tsv", "raw/processingOptions.json",
+        "raw/Experiment.json", "raw/channelNames.txt"),
+      Seq("x-metadata.tsv", "src_raw/experiment.json", "extra-metadata.tsv"),
+      Seq("s-metadata.tsv", "README.CSV", "s_I1_001.fastq.gz", "s_R1_001.fastq.gz",
+        "other-metadata.tsv"),
+      Seq("s-spatial_meta.txt", "raw_microscopy/s-AF_raw.czi",
+        "raw_microscopy/s-PAS_raw.scn", "IMS/s-instrument_metadata.yml"),
+      Seq("test.yml"),
+      Seq("nothing.bin", "sub/test.yml"),
+      relPaths("src/test/resources/fixture_multiassay"),
+    )
+    val batch = listings.zipWithIndex
+      .flatMap { case (ps, i) => ps.map(p => (s"d$i", p)) }.toDF("dataset_id", "rel_path")
+    val batched = CollectionDispatch.dispatchAll(batch).as[(String, String)].collect().toMap
+    listings.zipWithIndex.foreach { case (ps, i) =>
+      withClue(ps.mkString(", ")) { assert(CollectionDispatch.dispatch(ps) == batched(s"d$i")) }
+    }
+    assert(batched.values.toSet.size >= 7, batched)
   }
 }

@@ -89,10 +89,10 @@ class IngestSliceSpec extends SparkSpec {
   test("one request lists its upload once and builds its envelope once") {
     IngestSlice.run(spark, generic, "ds-warm")
     val jobs = jobsOf(IngestSlice.run(spark, generic, "ds-jobs"))
-    // measured on local[4]: 9 jobs (scan collect, dispatch's shuffle and
-    // result, metadata header + rows + violations, contributors header,
-    // envelope shuffle + result); the reference form fires 29
-    assert(jobs <= 12, s"$jobs jobs")
+    // measured on local[4]: 6 jobs (scan collect, metadata header + rows,
+    // contributors header, envelope shuffle + result); the reference form
+    // fires 29
+    assert(jobs <= 6, s"$jobs jobs")
   }
 
   // --------------------------------------------------------------- bug pins
@@ -201,7 +201,7 @@ class IngestSliceSpec extends SparkSpec {
 
     def run(spark: SparkSession, dir: String, datasetId: String): IngestResult = {
       val listing = FileCatalog.scan(spark, dir).withColumn("dataset_id", lit(datasetId))
-      val collectionType = CollectionDispatch.dispatch(listing)
+      val collectionType = CollectionDispatch.dispatchAll(listing).head().getString(1)
       val metadataPath = listing.filter(col("rel_path").rlike("(?i)^[^/]*metadata\\.tsv$"))
         .select("rel_path").collect().headOption.map(r => s"$dir/${r.getString(0)}")
       val (md, violations) = metadataPath match {

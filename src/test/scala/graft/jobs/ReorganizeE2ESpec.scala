@@ -15,7 +15,8 @@ class ReorganizeE2ESpec extends SparkSpec {
 
   test("multiassay upload splits into per-assay children with real file plans") {
     val listing = FileCatalog.scan(spark, root)
-    assert(CollectionDispatch.dispatch(listing) == "multiassay_metadatatsv")
+    assert(CollectionDispatch.dispatch(listing.select("rel_path").as[String].collect().toSeq) ==
+      "multiassay_metadatatsv")
 
     // combine the component metadata.tsv files like the reorganizer does
     val metadata = Seq("10x_multiome-metadata.tsv", "rna-metadata.tsv")
