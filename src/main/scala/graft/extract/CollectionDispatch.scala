@@ -112,15 +112,17 @@ object CollectionDispatch {
     }
     val counted = listing.groupBy("dataset_id").agg(aggs.head, aggs.tail: _*)
     val idx = patterns.zipWithIndex.toMap
-    // first-match over priority-sorted matchers as a when-chain
-    val chain = matchers.sortBy(-_.priority).foldLeft(lit(null).cast("string")) { (acc, m) =>
+    // first match over the priority-sorted matchers: one `when` per
+    // matcher under a coalesce, so the expression grows linearly with
+    // the ladder
+    val named = matchers.sortBy(-_.priority).map { m =>
       val cond = (m.requiredPatterns.map(p => col(s"p${idx(p)}") > 0) ++
         m.countPattern.map { case (p, n) => col(s"p${idx(p)}") >= n }.toSeq ++
         m.maxPattern.map { case (p, n) => col(s"p${idx(p)}") <= n }.toSeq)
         .reduceOption(_ && _).getOrElse(lit(true))
-      when(acc.isNotNull, acc).otherwise(when(cond, m.name))
+      when(cond, m.name)
     }
     counted.select(col("dataset_id"),
-      coalesce(chain, lit("unrecognized")).as("collection_type"))
+      coalesce(named :+ lit("unrecognized"): _*).as("collection_type"))
   }
 }

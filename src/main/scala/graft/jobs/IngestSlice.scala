@@ -13,11 +13,11 @@ import scala.jdk.CollectionConverters._
   * a generic metadata.tsv dataset — scan (S1) → dispatch (S14) → parse +
   * validate (S2/S4/V2) → envelope (+schema check) → route (J5) → status
   * event. The upload is listed once and its envelope built once: on
-  * `fixture_generic` one request runs 6 Spark jobs (the scan's collect,
-  * the metadata.tsv header and rows, the contributors header and the
-  * envelope's shuffle and result; it was 29 when each stage re-ran the
-  * scan). Later stages work from what the driver already holds:
-  * dispatch and the V2 rules run over the collected listing and
+  * `fixture_generic` one request runs 3 Spark jobs (the metadata.tsv
+  * rows and the envelope's shuffle and result; it was 29 when each
+  * stage re-ran the scan). The listing and both TSV headers are read on
+  * the driver, and later stages work from what it holds: dispatch and
+  * the V2 rules run over the listed file records and the collected
   * metadata rows, and the envelope plans over the listing as a local
   * relation, not by re-listing the tree (vs the reference's per-stage
   * YAML/XCom handoffs).
@@ -50,14 +50,13 @@ object IngestSlice {
     StructType(names.map(StructField(_, StringType)))
 
   def run(spark: SparkSession, dir: String, datasetId: String): IngestResult = {
-    // S1: distributed scan, collected once (the driver's file index holds
-    // every FileStatus of the upload already) and replanned as a local
-    // relation, so no later stage re-lists the tree
-    val scanned = FileCatalog.scan(spark, dir)
-    val files = scanned.collect()
-    val listing = spark.createDataFrame(files.toSeq.asJava, scanned.schema)
+    // S1: the upload's file records, listed once on the driver; the
+    // envelope plans over them as a local relation, so no later stage
+    // re-lists the tree
+    val files = FileCatalog.files(spark, dir)
+    val listing = spark.createDataFrame(files.asJava, FileCatalog.schema)
       .withColumn("dataset_id", lit(datasetId))
-    val relPaths = files.map(_.getAs[String]("rel_path")).toSeq
+    val relPaths = files.map(_.getAs[String]("rel_path"))
     // S14: priority dispatch
     val collectionType = CollectionDispatch.dispatch(relPaths)
     // S2/S4 + V2: metadata parse + structural validation; with several

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.sources.Readers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,9 +51,14 @@ object Reorganize {
     augmented
   }
 
-  /** Phase 2 inputs re-read from the frozen barrier — resume-safe. */
+  /** Phase 2 inputs re-read from the frozen barrier — resume-safe. The
+    * freeze directory is read as the TSV that [[phase1]] wrote, through
+    * `Readers.tsv`: its one part file names the columns from its header
+    * (`_SUCCESS` and `.crc` files are hidden from the listing), and no
+    * schema-inference job runs.
+    */
   def readFrozen(spark: SparkSession, freezePath: String): DataFrame =
-    spark.read.option("sep", "\t").option("header", "true").csv(freezePath)
+    Readers.tsv(spark, freezePath)
 
   /** Phase 2a: per-child metadata rows with rewritten paths
     * (split_and_create.py:184-249): data_path/contributors_path become

@@ -1,59 +1,91 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.regex.Pattern
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** S1/P6/P7/A5/V7 (SURVEY.md §2.1, §2.3): dataset directory-tree scan →
   * typed file catalog.
   *
   * The reference walks directories on one node (`os.walk`,
   * utils.py:717-767) and tags/annotates each file with first-match regex
-  * loops (utils.py:91-203). Here the listing is Spark's `binaryFile`
-  * source, which prunes the `content` column away when only metadata is
-  * selected, so the scan reads directory metadata, never file bytes.
-  * For one upload root `InMemoryFileIndex` lists on the driver: it lists
-  * as a distributed job only above
-  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths,
-  * and a traced `ingest_api` run shows no listing job
-  * (`sources.FileCatalog.jobs` = 0). Tagging and annotation are
-  * per-row projections over the listing.
+  * loops (utils.py:91-203). Here a root is listed once, on the driver,
+  * through the `InMemoryFileIndex` that Spark's `binaryFile` source
+  * builds for it: the same glob and existence checks, the same
+  * hidden-file filter (`_x`, `.x`, `x._COPYING_`), the same path form, and
+  * a distributed listing job only above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths.
+  * The index already holds every file's `FileStatus`, so no executor
+  * re-stats the files: the catalog is a local relation over those rows,
+  * and a traced `ingest_api` run shows no `sources.FileCatalog` job.
+  * Annotation is a per-row projection over the listing.
   */
 object FileCatalog {
 
-  /** P6 (utils.py:91-101 FILE_TYPE_MATCHERS): extension → type tag,
-    * first-match CASE chain over the enum in file_info_schema.yml.
-    */
-  def typeTag(pathCol: Column): Column =
-    when(pathCol.rlike("(?i)\\.csv$"), "csv")
-      .when(pathCol.rlike("(?i)\\.tsv$"), "tsv")
-      .when(pathCol.rlike("(?i)\\.(hdf5|h5)$"), "hdf5")
-      .when(pathCol.rlike("(?i)\\.h5ad$"), "h5ad")
-      .when(pathCol.rlike("(?i)\\.pdf$"), "pdf")
-      .when(pathCol.rlike("(?i)\\.json$"), "json")
-      .when(pathCol.rlike("(?i)\\.arrow$"), "arrow")
-      .when(pathCol.rlike("(?i)\\.(fastq|fq)(\\.gz)?$"), "fastq")
-      .when(pathCol.rlike("(?i)\\.(yaml|yml)$"), "yaml")
-      .when(pathCol.rlike("(?i)\\.zip$"), "zip")
-      .when(pathCol.rlike("(?i)\\.(tif|tiff)$"), "tiff")
-      .when(pathCol.rlike("(?i)\\.txt$"), "txt")
-      .otherwise("unknown")
+  private val typeTags: Seq[(Pattern, String)] = Seq(
+    "(?i)\\.csv$" -> "csv",
+    "(?i)\\.tsv$" -> "tsv",
+    "(?i)\\.(hdf5|h5)$" -> "hdf5",
+    "(?i)\\.h5ad$" -> "h5ad",
+    "(?i)\\.pdf$" -> "pdf",
+    "(?i)\\.json$" -> "json",
+    "(?i)\\.arrow$" -> "arrow",
+    "(?i)\\.(fastq|fq)(\\.gz)?$" -> "fastq",
+    "(?i)\\.(yaml|yml)$" -> "yaml",
+    "(?i)\\.zip$" -> "zip",
+    "(?i)\\.(tif|tiff)$" -> "tiff",
+    "(?i)\\.txt$" -> "txt",
+  ).map { case (re, tag) => Pattern.compile(re) -> tag }
 
-  /** S1: recursive scan of `root` → FileRecord rows
-    * (rel_path, type, size, modified). Only file metadata is read; the
-    * listing itself runs on the driver (see the object doc).
+  /** P6 (utils.py:91-101 FILE_TYPE_MATCHERS): extension → type tag,
+    * first match wins over the enum in file_info_schema.yml; a pattern
+    * matches as under Spark's `rlike` (`Pattern.matcher(path).find(0)`).
     */
-  def scan(spark: SparkSession, root: String): DataFrame = {
+  def typeTag(relPath: String): String =
+    typeTags.collectFirst { case (re, tag) if re.matcher(relPath).find(0) => tag }.getOrElse("unknown")
+
+  /** The FileRecord schema, with the nullability the `binaryFile` form had. */
+  val schema: StructType = StructType(Seq(
+    StructField("rel_path", StringType), StructField("size", LongType),
+    StructField("modified", TimestampType), StructField("type", StringType, nullable = false)))
+
+  /** The file relation behind a `DataFrameReader` result. Spark resolved
+    * its glob, its existence check and its `InMemoryFileIndex` listing on
+    * the driver when the reader built it; no job has run.
+    */
+  private[sources] def relationOf(read: DataFrame): HadoopFsRelation =
+    read.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+    }.get
+
+  /** S1: recursive listing of `root` → FileRecord rows (rel_path, size,
+    * modified, type) from the driver's file index, in the order a
+    * `binaryFile` scan returns them: the files that scan reads (no empty
+    * file), largest first, as `FilePartition` packs its splits.
+    */
+  def files(spark: SparkSession, root: String): Seq[Row] = {
     val rootNorm = new java.io.File(root.stripSuffix("/")).getAbsolutePath
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(rootNorm)
-      .select(
-        regexp_replace(col("path"), "^file:" + java.util.regex.Pattern.quote(rootNorm) + "/?", "")
-          .as("rel_path"),
-        col("length").as("size"),
-        col("modificationTime").as("modified"))
-      .withColumn("type", typeTag(col("rel_path")))
+    val prefix = Pattern.compile("^file:" + Pattern.quote(rootNorm) + "/?")
+    val index = relationOf(spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true").load(rootNorm)).location
+    index.listFiles(Nil, Nil).flatMap(_.files).sortBy(-_.getLen).map { f =>
+      val relPath = prefix.matcher(f.getPath.toString).replaceAll("")
+      new GenericRowWithSchema(Array(relPath, f.getLen,
+        new java.sql.Timestamp(f.getModificationTime), typeTag(relPath)), schema)
+    }
   }
+
+  /** S1 as a DataFrame: a local relation over [[files]], so planning and
+    * running it lists nothing again.
+    */
+  def scan(spark: SparkSession, root: String): DataFrame =
+    spark.createDataFrame(files(spark, root).asJava, schema)
 
   /** A manifest-annotation rule (P7, utils.py:155-203): ordered regex →
     * templated description + EDAM term + flags; `{g1}` in the template is
@@ -64,7 +96,7 @@ object FileCatalog {
                                 isDataProduct: Boolean = false)
 
   /** P7: ordered first-match annotation — one CASE chain per output
-    * column over the rules in order, like [[typeTag]], with template
+    * column over the rules in order, with template
     * expansion via regexp_extract. A per-row projection: no join, no
     * window, no shuffle. Output is the listing with `rel_path` first,
     * then description, edam_term, is_qa_qc, is_data_product.

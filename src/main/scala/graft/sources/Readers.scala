@@ -1,7 +1,14 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import graft.sources.SimpleYaml
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftGlue, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFileLinesReader, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -16,13 +23,64 @@ object Readers {
     * schema, every column `StringType` (schema-on-read). The reference's
     * delimiter-sanity check (an empty key ⇒ the file probably isn't
     * really tab-separated) becomes [[tsvDelimiterViolations]].
+    *
+    * The header is read on the driver, so building the frame runs no
+    * job. Spark's CSV schema inference runs one (`take(1)` over the text
+    * of every file); this reads the line that job returns: the first
+    * line, in split order, that is neither a comment nor blank (empty or
+    * spaces only: the job filters with SQL `trim`, which strips only
+    * spaces, so a tab-only line is a header). Split order is how
+    * `FilePartition` packs the input, largest split first, so with
+    * several files of different headers the largest file's header names
+    * the columns. The line is parsed with the CSV options' univocity
+    * settings and named with `CSVUtils.makeSafeHeader`, then the files
+    * are read with that all-string schema over the index Spark already
+    * listed. Results equal the inferring read: the same glob and
+    * missing-path errors, `_c<i>` names and duplicate suffixes (and the
+    * error when a suffix clashes), an empty schema for empty input, and
+    * the same error when `path` holds no visible file.
     */
-  def tsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
+  def tsv(spark: SparkSession, path: String): DataFrame = {
+    val listed = FileCatalog.relationOf(spark.read.schema(new StructType())
       .option("sep", "\t")
       .option("header", "true")
       .option("inferSchema", "false")
-      .csv(path)
+      .csv(path))
+    val index = listed.location.asInstanceOf[PartitioningAwareFileIndex]
+    if (index.allFiles().isEmpty) throw GraftGlue.unableToInferSchema(listed.fileFormat.toString)
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(listed.options, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val header = firstLine(spark, index, listed.options, options)
+      .flatMap(line => Option(new CsvParser(options.asParserSettings).parseLine(line)))
+      .map(CSVUtils.makeSafeHeader(_, conf.caseSensitiveAnalysis, options).toSeq)
+      .getOrElse(Nil)
+    val dataSchema = StructType(header.map(StructField(_, StringType)))
+    GraftGlue.checkColumnNameDuplication(dataSchema, conf.caseSensitiveAnalysis)
+    spark.baseRelationToDataFrame(listed.copy(dataSchema = dataSchema)(listed.sparkSession))
+  }
+
+  /** The first non-blank, non-comment line of `index`'s files in split
+    * order, read as the text source reads it (a UTF-8 BOM skipped, any
+    * line end), stopping at that line.
+    */
+  private def firstLine(spark: SparkSession, index: PartitioningAwareFileIndex,
+                        params: Map[String, String], options: CSVOptions): Option[String] = {
+    val selected = index.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(spark, selected)
+    val text = new TextFileFormat
+    val splits = selected.flatMap(_.files).flatMap { f =>
+      PartitionedFileUtil.splitFiles(f, f.getPath, text.isSplitable(spark, params, f.getPath),
+        maxSplit, InternalRow.empty)
+    }.sortBy(-_.length)
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(params)
+    val comment = if (options.isCommentSet) Some(options.comment.toString) else None
+    splits.iterator.flatMap { split =>
+      val reader = new HadoopFileLinesReader(split, options.lineSeparatorInRead, hadoopConf)
+      try reader.map(t => new String(t.getBytes, 0, t.getLength, options.charset))
+        .find(l => l.exists(_ != ' ') && !comment.exists(l.startsWith))
+      finally reader.close()
+    }.nextOption()
+  }
 
   /** Delimiter-error detection (tsv_metadata_file.py:25-30): empty header
     * names or a single mega-column signal a wrong delimiter. Returns

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.errors.QueryCompilationErrors
 
 /** Bridge into `private[sql]` Column↔Expression conversion for graft's
   * custom Catalyst expressions (Spark 4 moved the classic constructors
@@ -11,6 +12,18 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftGlue {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** The error a file source raises when it finds no file to infer a
+    * schema from.
+    */
+  def unableToInferSchema(format: String): Throwable =
+    QueryCompilationErrors.dataSchemaNotSpecifiedError(format)
+
+  /** The duplicate-column check a file source applies to its data schema
+    * when it resolves a relation.
+    */
+  def checkColumnNameDuplication(schema: types.StructType, caseSensitive: Boolean): Unit =
+    util.SchemaUtils.checkSchemaColumnNameDuplication(schema, caseSensitive)
 
   /** Register the driver's StateStoreCoordinator RPC endpoint if a
     * streaming query hasn't already. BATCH-mode `transformWithState`

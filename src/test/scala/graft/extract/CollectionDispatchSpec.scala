@@ -88,4 +88,14 @@ class CollectionDispatchSpec extends SparkSpec {
     }
     assert(batched.values.toSet.size >= 7, batched)
   }
+
+  test("dispatchAll's first-match expression grows linearly with the number of matchers") {
+    val listing = Seq(("d", "a.x3")).toDF("dataset_id", "rel_path")
+    def dispatched(n: Int) = CollectionDispatch.dispatchAll(listing, (0 until n).map(i =>
+      CollectionDispatch.CollectionMatcher(s"m$i", 1.0, requiredPatterns = Seq(s"\\.x$i$$"))))
+    val sizes = (1 to 12).map(n =>
+      dispatched(n).queryExecution.analyzed.expressions.map(_.collect { case e => e }.size).sum)
+    assert(sizes.zip(sizes.tail).map { case (a, b) => b - a }.distinct.size == 1, sizes)
+    assert(dispatched(12).as[(String, String)].collect().toSeq == Seq(("d", "m3")))
+  }
 }

@@ -1,12 +1,97 @@
 package graft.sources
 
+import java.nio.file.{Files, Path}
+import java.util.regex.Pattern
+
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class FileCatalogSpec extends SparkSpec {
   import spark.implicits._
 
   private val root = "src/test/resources/fixture_generic"
+
+  /** The listing as it was built before the driver catalog, kept as the
+    * reference: Spark's `binaryFile` source (whose scan job re-stats every
+    * listed file) with the type tag as a Spark CASE chain.
+    */
+  private def binaryFileScan(root: String): DataFrame = {
+    def typeTag(p: Column): Column =
+      when(p.rlike("(?i)\\.csv$"), "csv")
+        .when(p.rlike("(?i)\\.tsv$"), "tsv")
+        .when(p.rlike("(?i)\\.(hdf5|h5)$"), "hdf5")
+        .when(p.rlike("(?i)\\.h5ad$"), "h5ad")
+        .when(p.rlike("(?i)\\.pdf$"), "pdf")
+        .when(p.rlike("(?i)\\.json$"), "json")
+        .when(p.rlike("(?i)\\.arrow$"), "arrow")
+        .when(p.rlike("(?i)\\.(fastq|fq)(\\.gz)?$"), "fastq")
+        .when(p.rlike("(?i)\\.(yaml|yml)$"), "yaml")
+        .when(p.rlike("(?i)\\.zip$"), "zip")
+        .when(p.rlike("(?i)\\.(tif|tiff)$"), "tiff")
+        .when(p.rlike("(?i)\\.txt$"), "txt")
+        .otherwise("unknown")
+    val rootNorm = new java.io.File(root.stripSuffix("/")).getAbsolutePath
+    spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true")
+      .load(rootNorm)
+      .select(
+        regexp_replace(col("path"), "^file:" + Pattern.quote(rootNorm) + "/?", "").as("rel_path"),
+        col("length").as("size"),
+        col("modificationTime").as("modified"))
+      .withColumn("type", typeTag(col("rel_path")))
+  }
+
+  /** A tree with nested and hidden entries, awkward names, an empty file,
+    * every type tag, and files of equal and different sizes.
+    */
+  private lazy val tree: String = {
+    val dir = Files.createTempDirectory("file-catalog")
+    def write(rel: String, bytes: Int): Unit = {
+      val p: Path = dir.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array.fill[Byte](bytes)('x'.toByte))
+    }
+    Seq("a.csv" -> 40, "b.TSV" -> 40, "c.h5" -> 12, "d.hdf5" -> 3, "e.h5ad" -> 7,
+      "f.pdf" -> 9, "g.json" -> 9, "h.arrow" -> 1, "i.fq.gz" -> 2, "j.FASTQ" -> 2,
+      "k.yml" -> 5, "l.zip" -> 30, "m.TIF" -> 6, "n.tiff" -> 6, "o.txt" -> 8, "p.jpg" -> 4,
+      "nested/one/two/deep.csv" -> 20, "nested/one/side.tsv" -> 40, "nested/x.txt" -> 1,
+      "with space.tsv" -> 11, "100%.csv" -> 13, "naïve ü.txt" -> 15, "日本/データ.json" -> 17,
+      "empty.txt" -> 0, "nested/empty.csv" -> 0,
+      ".hidden.txt" -> 5, "_meta.json" -> 5, "part.csv._COPYING_" -> 5,
+      ".hiddendir/in.txt" -> 5, "_hiddendir/in.csv" -> 5, "nested/.crc/x.txt" -> 5,
+    ).foreach { case (rel, n) => write(rel, n) }
+    dir.toString
+  }
+
+  test("scan equals the binaryFile listing, row for row, on an awkward tree") {
+    val got = FileCatalog.scan(spark, tree)
+    val want = binaryFileScan(tree)
+    assert(got.schema == want.schema)
+    val rows = got.collect().toSeq
+    assert(rows == want.collect().toSeq)
+    // hidden entries and empty files are not listed; awkward names are
+    assert(rows.size == 23)
+    val paths = rows.map(_.getAs[String]("rel_path")).toSet
+    assert(Set("with space.tsv", "100%.csv", "naïve ü.txt", "日本/データ.json",
+      "nested/one/two/deep.csv").subsetOf(paths))
+    assert(rows.map(_.getAs[String]("type")).toSet == Set("csv", "tsv", "hdf5", "h5ad", "pdf",
+      "json", "arrow", "fastq", "yaml", "zip", "tiff", "txt", "unknown"))
+    // on a trailing slash too
+    assert(FileCatalog.scan(spark, tree + "/").collect().toSeq == rows)
+  }
+
+  test("scan lists on the driver: building and collecting it fires no job") {
+    assert(jobsOf(FileCatalog.scan(spark, tree).collect()) == 0)
+    assert(jobsOf(FileCatalog.files(spark, root)) == 0)
+  }
+
+  test("a missing root fails as the binaryFile listing does") {
+    val missing = tree + "/no-such-dir"
+    val now = intercept[Exception](FileCatalog.scan(spark, missing))
+    val before = intercept[Exception](binaryFileScan(missing))
+    assert(now.getClass == before.getClass && now.getMessage == before.getMessage)
+  }
 
   test("scan lists all files with relative paths, sizes and type tags") {
     val got = FileCatalog.scan(spark, root)

@@ -1,6 +1,9 @@
 package graft.sources
 
+import java.nio.file.{Files, Path}
+
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ReadersSpec extends SparkSpec {
@@ -8,6 +11,120 @@ class ReadersSpec extends SparkSpec {
 
   private val gen = "src/test/resources/fixture_generic"
   private val dev = "src/test/resources/fixture_devtest"
+
+  // ------------------------------------------------ tsv header parity
+
+  /** The TSV read as it was before the driver header, kept as the
+    * reference: Spark's CSV source infers the header with a job.
+    */
+  private def inferring(path: String): DataFrame =
+    spark.read
+      .option("sep", "\t")
+      .option("header", "true")
+      .option("inferSchema", "false")
+      .csv(path)
+
+  private def write(dir: Path, rel: String, text: String): Path = {
+    val p = dir.resolve(rel)
+    Files.createDirectories(p.getParent)
+    Files.write(p, text.getBytes("UTF-8"))
+  }
+
+  /** A fresh directory holding `files` (relative path → text). */
+  private def tree(files: (String, String)*): Path = {
+    val dir = Files.createTempDirectory("readers-tsv")
+    files.foreach { case (rel, text) => write(dir, rel, text) }
+    dir
+  }
+
+  /** A fresh directory's one file holding `text`. */
+  private def file(text: String): String = tree("t.tsv" -> text).resolve("t.tsv").toString
+
+  /** `Readers.tsv(path)` has the inferring read's columns and rows and
+    * is built without a job.
+    */
+  private def assertSameRead(path: String): Unit = {
+    var got: DataFrame = null
+    assert(jobsOf { got = Readers.tsv(spark, path) } == 0)
+    val want = inferring(path)
+    assert(got.schema == want.schema)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.collect().toSeq == want.collect().toSeq)
+  }
+
+  test("tsv names columns as Spark's inference does: quotes, duplicates, empty names") {
+    Seq(
+      "quoted" -> "\"a b\"\t\"c\"\"d\"\tplain\n1\t2\t3\n",
+      "case-insensitive duplicates" -> "Name\tname\tNAME\tother\tx\tx\n1\t2\t3\t4\t5\t6\n",
+      "empty names" -> "a\t\tb\t\n1\t2\t3\t4\n",
+    ).foreach { case (name, text) =>
+      withClue(s"$name: ") { assertSameRead(file(text)) }
+    }
+    val cols = Readers.tsv(spark, file("a\t\tb\t\tA\n")).columns
+    assert(cols.toSeq == Seq("a0", "_c1", "b", "_c3", "A4"))
+  }
+
+  test("tsv reads the header line as the text source does: BOM, CRLF, blank and tab-only lines") {
+    Seq(
+      "UTF-8 BOM" -> "\uFEFFid\tval\n1\t2\n",
+      "CRLF" -> "id\tval\r\n1\t2\r\n3\t4\r\n",
+      "leading blank lines" -> "\n\n   \n\r\nid\tval\n1\t2\n",
+      "a tab-only first line" -> "\t\nid\tval\n1\t2\n",
+      "header only" -> "id\tval\n",
+      "empty file" -> "",
+      "blank lines only" -> "\n  \n",
+    ).foreach { case (name, text) =>
+      withClue(s"$name: ") { assertSameRead(file(text)) }
+    }
+    assert(Readers.tsv(spark, file("\uFEFFid\tval\n")).columns.toSeq == Seq("id", "val"))
+  }
+
+  test("tsv over a glob of files takes the header of the first split, largest first") {
+    val dir = tree(
+      "a-metadata.tsv" -> "small\tcols\n1\t2\n",
+      "b-metadata.tsv" -> ("x\ty\tz\n" + "1\t2\t3\n" * 20),
+      "c-metadata.tsv" -> ("p\tq\n" + "1\t2\n" * 5),
+      "notes.txt" -> "not\tmatched\n")
+    assertSameRead(s"$dir/*-metadata.tsv")
+    assert(Readers.tsv(spark, s"$dir/*-metadata.tsv").columns.toSeq == Seq("x", "y", "z"))
+    assertSameRead(dir.toString)
+    // files split mid-line: tiny splits put the first split of one file first
+    val small = Seq("spark.sql.files.maxPartitionBytes" -> "16", "spark.sql.files.openCostInBytes" -> "1")
+    val saved = small.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      small.foreach { case (k, v) => spark.conf.set(k, v) }
+      assertSameRead(s"$dir/*-metadata.tsv")
+      assertSameRead(tree("big.tsv" -> ("\n" * 40 + "late\theader\n" + "1\t2\n" * 10),
+        "other.tsv" -> ("o\tp\n" + "3\t4\n" * 10)).toString)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("tsv reads a coalesce(1) freeze directory and a partitioned directory") {
+    val freeze = Files.createTempDirectory("readers-freeze").resolve("frozen").toString
+    Seq(("a", "1", null), ("b", "2", "x")).toDF("k", "v", "w")
+      .coalesce(1).write.option("sep", "\t").option("header", "true").csv(freeze)
+    val names = new java.io.File(freeze).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+    assertSameRead(freeze)
+    assert(Readers.tsv(spark, freeze).columns.toSeq == Seq("k", "v", "w"))
+    assertSameRead(tree("day=1/a.tsv" -> "id\tval\n1\t2\n", "day=2/b.tsv" -> "id\tval\n3\t4\n").toString)
+  }
+
+  test("tsv fails as the inferring read does: missing path, empty glob, no visible file, clashing names") {
+    val dir = tree("_SUCCESS" -> "", ".hidden.tsv" -> "a\tb\n")
+    // duplicate suffixes make `a0 a1 a1`
+    val clash = file("a\ta\ta1\n1\t2\t3\n")
+    Seq(s"$dir/missing.tsv", s"$dir/*-metadata.tsv", dir.toString, clash).foreach { path =>
+      withClue(s"$path: ") {
+        val now = intercept[Exception](Readers.tsv(spark, path))
+        val before = intercept[Exception](inferring(path))
+        assert(now.getClass == before.getClass && now.getMessage == before.getMessage)
+      }
+    }
+  }
 
   test("tsv reads all-string schema-on-read") {
     val df = Readers.tsv(spark, s"$gen/my-metadata.tsv")
