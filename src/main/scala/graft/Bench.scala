@@ -222,8 +222,8 @@ object Bench {
     * page cache, and the table's [[Tables]] catalog entry, so its one
     * schema inference lands here) so the first query touching a table
     * doesn't absorb its one-time setup cost — per-query numbers then
-    * measure the query, not filesystem metadata. Bench, Profile and
-    * ProfileJobs all run it, so their numbers are comparable.
+    * measure the query, not filesystem metadata. Bench and Profile both
+    * run it, so their numbers are comparable.
     */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
     Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -38,7 +38,7 @@ object SparkEntry {
     NaiveBayes,
     LanguageModel,
     SeqPack,
-    RoundNineOps,
+    StatisticalAudits,
     graft.streaming.StreamParity,
   )
 

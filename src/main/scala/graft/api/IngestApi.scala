@@ -1,13 +1,12 @@
 package graft.api
 
 import graft.jobs.{IngestSlice, Reorganize}
-import graft.operators.Dedup
 import graft.status.StatusMachine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §7 module 8 — the thin facade mirroring `endpoint.py`'s surface
-  * (request_ingest, bulk, validate, reorganize, checksums) over the
+  * (request_ingest, bulk, validate, reorganize, status) over the
   * engine's job layer. Transport (REST/CLI) stays outside; this object
   * is the complete programmatic API a reference user would call, with
   * the same idempotency semantics:
@@ -69,10 +68,6 @@ object IngestApi {
     */
   def reorganize(metadata: DataFrame, uploadId: String, freezePath: String): DataFrame =
     Reorganize.phase1(metadata, uploadId, freezePath)
-
-  /** checksums: the A7 manifest over a documents-shaped payload table. */
-  def checksums(payloads: DataFrame): DataFrame =
-    Dedup.checksumManifest(payloads)
 
   /** status update: requested transitions through the V5 guard rails —
     * returns (accepted, rejected-with-reason); callers append accepted

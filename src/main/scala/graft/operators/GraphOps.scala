@@ -476,7 +476,8 @@ object GraphOps extends QueryModule {
     * (the q143 fixed-iteration doctrine; true LPA iterates to
     * convergence, and a fixed round count is what keeps the oracle
     * expressible). Output is the community-size histogram, a bounded
-    * frame.
+    * frame, read off the (node, lbl) assignment of [[lpLabels]] (the
+    * entry the shared labels artifact feeds).
     *
     * Scale: each round is one edges⋈labels join (edges pre-partitioned
     * on the source key, labels shuffling on the same key) + one
@@ -485,11 +486,6 @@ object GraphOps extends QueryModule {
     * edge-sized, and the argmax is `min(struct(-c, lbl))`, a map-side
     * partial agg, not a window sort.
     */
-  def labelPropagation(und: DataFrame, rounds: Int = 2): DataFrame =
-    labelHistogram(lpLabels(und, rounds))
-
-  /** The q232 report over an already-computed (node, lbl) assignment —
-    * the entry the shared labels artifact feeds. */
   def labelHistogram(labels: DataFrame): DataFrame =
     labels
       .groupBy("lbl").agg(count(lit(1)).as("community_size"))

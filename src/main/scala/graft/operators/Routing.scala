@@ -35,12 +35,17 @@ object Routing extends QueryModule {
     // Static rule tables compile to a first-match CASE chain with
     // LITERAL patterns (SURVEY.md §4): each regex compiles once inside
     // codegen, versus an rlike-join whose non-literal pattern recompiles
-    // per row×rule. No join, no shuffle — a narrow projection.
-    val chain = rules.sortBy(_.priority).foldLeft(lit(null).cast("string")) { (acc, r) =>
-      when(acc.isNotNull, acc).otherwise(when(col("source").rlike(r.pattern), r.workflow))
+    // per row×rule. No join, no shuffle — a narrow projection. One CASE
+    // with a branch per rule, so the expression grows linearly in the
+    // rules; a null `source` matches no branch and gets `default`.
+    def matches(r: RoutingRule) = col("source").rlike(r.pattern)
+    val sorted = rules.sortBy(_.priority)
+    val workflow = sorted.headOption.fold(lit(default)) { first =>
+      sorted.tail.foldLeft(when(matches(first), first.workflow)) { (chain, r) =>
+        chain.when(matches(r), r.workflow)
+      }.otherwise(default)
     }
-    documents.select(col("doc_id"), col("source"),
-        coalesce(chain, lit(default)).as("workflow"))
+    documents.select(col("doc_id"), col("source"), workflow.as("workflow"))
       .orderBy("doc_id")
   }
 
@@ -59,16 +64,6 @@ object Routing extends QueryModule {
     df.join(matched, Seq(keyCol), "left")
       .withColumn("workflow", coalesce(col("workflow"), lit(default)))
   }
-
-  /** Dynamic-rules variant (rule table only known at runtime, e.g. read
-    * from a config table) — J5's general form. Use [[routeByRules]] when
-    * the table is static.
-    */
-  def routeByRulesTable(documents: DataFrame, rulesDf: DataFrame,
-                        default: String = "wf_default"): DataFrame =
-    firstMatch(documents.select("doc_id", "source"), rulesDf, "doc_id", "source", default)
-      .select("doc_id", "source", "workflow")
-      .orderBy("doc_id")
 
   /** P7 (PipelineFileMatcher.get_file_metadata utils.py:155-203): ordered
     * first-match regex annotation with templated descriptions built from

@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Round-9 additions — each the missing rung of a ladder earlier
-  * rounds built:
+/** Statistical audits over the corpus and its raters: bootstrap
+  * intervals, rater reliability, hypothesis tests, drift and
+  * distribution audits — each the missing rung of a ladder other
+  * modules built:
   *   - q333 Poisson bootstrap (the REAL bootstrap next to q152's
   *     half-sample approximation; per-source CIs),
   *   - q334 Dawid–Skene rater reliability (the model q297/q318 measure
@@ -31,7 +33,7 @@ import org.apache.spark.sql.functions._
   *   - q349 minimum-detectable-effect power gate,
   *   - q350 embedding-space PSI drift (sign-projection buckets).
   */
-object RoundNineOps extends QueryModule {
+object StatisticalAudits extends QueryModule {
 
   /** q333: POISSON-BOOTSTRAP confidence intervals for per-source mean
     * document length — THE scalable bootstrap (Chamandy et al., Google

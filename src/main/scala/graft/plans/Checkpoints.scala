@@ -139,22 +139,6 @@ object Checkpoints {
       case _ =>
     }
 
-  /** Presentation sort over a BOUNDED (report-sized) result: materialize
-    * the frame with [[cut]], THEN apply the global orderBy. A global
-    * sort's range partitioner SAMPLES its child before the real pass.
-    * When this helps — and when it doesn't: under AQE, query stages
-    * materialize bottom-up, so the sampling re-executes only the segment
-    * ABOVE the last shuffle. If that segment is a cheap post-shuffle
-    * aggregate (most report tails), the cut buys nothing (A/B-measured
-    * flat on q187/q113/q115/q117/q137). It pays ~2× exactly when the
-    * segment between the last exchange and the sort is map-heavy —
-    * q94's broadcast-join probe chain (measured 3.7 → 2.1 s at sf0.1).
-    * Only for results whose size is set by the report schema, never
-    * corpus-sized outputs (those would pin corpus-scale storage).
-    */
-  def cutSorted(df: DataFrame, sortCols: org.apache.spark.sql.Column*): DataFrame =
-    cut(df).orderBy(sortCols: _*)
-
   /** `cache()` an intermediate that the operator's RESULT plan consumes
     * lazily (so the operator itself has no safe point to unpersist), and
     * register it for [[release]]. Returns the same Dataset. A plan that

@@ -170,19 +170,6 @@ object Readers {
       .select(col("key"),
               transform(split(col("vals"), "\\s+"), v => v.cast("double")).as("values"))
 
-  /** S11 (txt_wordlist_metadata_file.py): one word per line. */
-  def wordlist(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path).select(trim(col("value")).as("word")).filter(col("word") =!= "")
-
-  /** S12 (fastq/ignore/false_json stubs): recognized-but-unparsed types —
-    * catalog entry with a type tag and empty payload, preserving the
-    * reference's "known but skipped" semantics.
-    */
-  def stubCatalogEntry(spark: SparkSession, path: String, typeTag: String): DataFrame = {
-    import spark.implicits._
-    Seq((path, typeTag, "{}")).toDF("path", "type", "payload")
-  }
-
   /** S11 (mtx_tform_metadata_file.py:10-25): geometric-transform matrix
     * files — whitespace-separated floats, EXACTLY 4 rows per file (the
     * reference asserts the row count but, faithfully, NOT the width;

@@ -19,13 +19,11 @@ import org.apache.spark.sql.functions._
 object IngestStream {
 
   /** q200: gap-based session aggregation with Spark's NATIVE
-    * `session_window` (the builtin merging-window state operator — the
-    * declarative counterpart of StatefulSessions' custom
-    * flatMapGroupsWithState path): per (user, session) event count and
-    * value sum, where a session closes after `gap` of inactivity and
-    * the window end is last-event + gap. Identical code runs as a batch
-    * backfill (the oracle surface) and as a watermarked append stream
-    * (spec-proven parity).
+    * `session_window` (the builtin merging-window state operator): per
+    * (user, session) event count and value sum, where a session closes
+    * after `gap` of inactivity and the window end is last-event + gap.
+    * Identical code runs as a batch backfill (the oracle surface) and as
+    * a watermarked append stream (spec-proven parity).
     */
   def sessionWindowUsage(events: DataFrame, gap: String = "30 minutes",
                          watermark: String = "1 hour"): DataFrame =
@@ -390,7 +388,7 @@ object IngestStream {
     * (durable, batch-idempotent) [[MonitorState]] map — one
     * (day → n, x) entry per calendar day — and every update refolds the
     * SPRT decision table through the SAME finisher the batch monitor
-    * uses ([[graft.operators.RoundNineOps.sprtFromDays]]) — the q57/q101
+    * uses ([[graft.operators.StatisticalAudits.sprtFromDays]]) — the q57/q101
     * batch==stream parity contract as code sharing, proven row-for-row
     * in IngestStreamSpec; crash-resume proven by the restart spec.
     */
@@ -412,7 +410,7 @@ object IngestStream {
           st.commit(batchId)
         }
         if (st.map.nonEmpty)
-          onDecision(graft.operators.RoundNineOps.sprtFromDays(
+          onDecision(graft.operators.StatisticalAudits.sprtFromDays(
             st.map.toSeq.map { case (d, (n, x)) => (d, n, x) }
               .toDF("day", "n", "x")))
         ()
@@ -421,12 +419,12 @@ object IngestStream {
 
   /** q350's streaming twin: the embedding stream's PSI drift monitor.
     * Each micro-batch runs the DISTRIBUTED bucket-cell aggregation
-    * ([[graft.operators.RoundNineOps.psiBucketCells]] — posexplode +
+    * ([[graft.operators.StatisticalAudits.psiBucketCells]] — posexplode +
     * broadcast sign grid + two keyed aggs, nothing wider than
     * (vec_id, long) shuffles); only the ≤2^projs cell histogram reaches
     * the driver, merges into the cumulative cell map, and refolds
     * through the SAME PSI finisher the batch monitor uses
-    * ([[graft.operators.RoundNineOps.psiFromCells]]). State is 64 rows
+    * ([[graft.operators.StatisticalAudits.psiFromCells]]). State is 64 rows
     * forever — what a daily vector-drift monitor can afford at any
     * corpus rate.
     */
@@ -444,7 +442,7 @@ object IngestStream {
         // load-bearing here: a replayed micro-batch after a crash would
         // otherwise double-count its cells
         if (!st.alreadyApplied(batchId)) {
-          graft.operators.RoundNineOps.psiBucketCells(batch, projs)
+          graft.operators.StatisticalAudits.psiBucketCells(batch, projs)
             .collect().foreach { r =>
               val k = r.getLong(0).toString
               val (pr, pc) = st.map.getOrElse(k, (0L, 0L))
@@ -453,7 +451,7 @@ object IngestStream {
           st.commit(batchId)
         }
         if (st.map.nonEmpty)
-          onUpdate(graft.operators.RoundNineOps.psiFromCells(
+          onUpdate(graft.operators.StatisticalAudits.psiFromCells(
             st.map.toSeq.map { case (b, (nr, nc)) => (b.toLong, nr, nc) }
               .toDF("bucket", "n_ref", "n_cur")))
         ()

@@ -596,7 +596,7 @@ class PlanAssertionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("q344 ECDF grid plans the value crossJoin as broadcast regardless of stats") {
-    val p = planText(graft.operators.RoundNineOps.bhFdrDrift(t.documents))
+    val p = planText(graft.operators.StatisticalAudits.bhFdrDrift(t.documents))
     assert(p.contains("BroadcastNestedLoopJoin"),
       s"expected the hinted value-grid crossJoin to broadcast:\n$p")
     assert(!p.contains("CartesianProduct"),

@@ -26,9 +26,7 @@ trait SparkSpec extends AnyFunSuite {
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 50, s"walk found only ${files.size} sources")
     files.map(p => p.getFileName.toString ->
-      new String(Files.readAllBytes(p), "UTF-8")
-        .replaceAll("(?s)/\\*.*?\\*/", "")
-        .replaceAll("//[^\n]*", ""))
+      SparkSpec.stripComments(new String(Files.readAllBytes(p), "UTF-8")))
   }
 
   /** Jobs fired by `body` on this thread (and the threads it spawns),
@@ -62,4 +60,10 @@ trait SparkSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
   }
+}
+
+object SparkSpec {
+  /** `code` with its block and line comments removed. */
+  def stripComments(code: String): String =
+    code.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
 }

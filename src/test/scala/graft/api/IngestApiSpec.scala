@@ -1,7 +1,6 @@
 package graft.api
 
 import graft.SparkSpec
-import graft.jobs.DevtestRunner
 
 class IngestApiSpec extends SparkSpec {
   import spark.implicits._
@@ -43,11 +42,5 @@ class IngestApiSpec extends SparkSpec {
     ).toDF("uuid", "entity_type", "status", "ts", "seq")
     val view = IngestApi.statusView(events).collect()
     assert(view.length == 1 && view.head.getAs[String]("status") == "processing")
-  }
-
-  test("the pipeline-runner boundary stays mockable") {
-    assert(DevtestRunner.run("codex_cytokit", Map.empty) == "qa")
-    assert(DevtestRunner.run("anything", Map("fail" -> "true")) == "error")
-    assert(DevtestRunner.run("no_workflow", Map.empty) == "invalid")
   }
 }

@@ -26,7 +26,7 @@ class Round9OpsSpec extends SparkSpec {
   test("poissonBootstrap: constant-length source collapses the CI to the mean") {
     val d = docs((1L to 50L).map(i => (i, "t", "en")))
       .withColumn("n_chars", lit(100L))
-    val r = RoundNineOps.poissonBootstrap(d).collect()(0)
+    val r = StatisticalAudits.poissonBootstrap(d).collect()(0)
     assert(r.getAs[Long]("mean_micro") == 100000000L)
     assert(r.getAs[Long]("lo_micro") == 100000000L)
     assert(r.getAs[Long]("hi_micro") == 100000000L)
@@ -35,7 +35,7 @@ class Round9OpsSpec extends SparkSpec {
 
   test("poissonBootstrap: corpus CI brackets are ordered and weights behave") {
     val d = spark.read.parquet(s"${sf("")}/documents.parquet")
-    val rows = RoundNineOps.poissonBootstrap(d).collect()
+    val rows = StatisticalAudits.poissonBootstrap(d).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (lo, hi, m) = (r.getAs[Long]("lo_micro"), r.getAs[Long]("hi_micro"),
@@ -52,7 +52,7 @@ class Round9OpsSpec extends SparkSpec {
   test("dawidSkene: perfect raters earn se = sp = 1 and the true prevalence") {
     val d = docs((1L to 10L).map(i => (i, "the a and", "en")) ++
       (11L to 20L).map(i => (i, "zz yy xx", "de")))
-    val out = RoundNineOps.dawidSkene(d).collect()
+    val out = StatisticalAudits.dawidSkene(d).collect()
       .map(r => r.getAs[String]("rater") -> r).toMap
     Seq("a_label", "b_stopword", "c_erate").foreach { r =>
       assert(out(r).getAs[Long]("se_micro") == 1000000L, s"$r sensitivity")
@@ -67,7 +67,7 @@ class Round9OpsSpec extends SparkSpec {
     val d = docs((1L to 10L).map(i => (i, "the a and", "en")) ++
       (11L to 20L).map(i => (i, "the a and xxxxxxxxxx", "en")) ++
       (21L to 40L).map(i => (i, "zz yy xx", "de")))
-    val out = RoundNineOps.dawidSkene(d).collect()
+    val out = StatisticalAudits.dawidSkene(d).collect()
       .map(r => r.getAs[String]("rater") -> r).toMap
     assert(out("a_label").getAs[Long]("se_micro") == 1000000L)
     assert(out("b_stopword").getAs[Long]("se_micro") == 1000000L)
@@ -81,14 +81,14 @@ class Round9OpsSpec extends SparkSpec {
   test("confidentLearning: clean labels read ~zero noise, one flip reads > 0") {
     val clean = docs((1L to 10L).map(i => (i, "zz ee ee", "en")) ++
       (11L to 20L).map(i => (i, "zz yy xx", "de")))
-    val r0 = RoundNineOps.confidentLearning(clean).collect()(0)
+    val r0 = StatisticalAudits.confidentLearning(clean).collect()(0)
     assert(r0.getAs[Long]("c10") == 0L && r0.getAs[Long]("c01") == 0L)
     assert(r0.getAs[Long]("noise_ppm") == 0L)
     // flip one high-e doc's label to de: it clears the en threshold
     val flipped = docs((1L to 10L).map(i => (i, "zz ee ee", "en")) ++
       Seq((99L, "zz ee ee", "de")) ++
       (11L to 20L).map(i => (i, "zz yy xx", "de")))
-    val r1 = RoundNineOps.confidentLearning(flipped).collect()(0)
+    val r1 = StatisticalAudits.confidentLearning(flipped).collect()(0)
     assert(r1.getAs[Long]("c01") >= 1L, "the flipped doc lands off-diagonal")
     assert(r1.getAs[Long]("noise_ppm") > 0L)
   }
@@ -102,7 +102,7 @@ class Round9OpsSpec extends SparkSpec {
     val d = vecs(Seq(
       (1L, Seq(1f, 0f), 0), (2L, Seq(1f, 0f), 0),          // collapsed
       (3L, Seq(1f, 0f), 1), (4L, Seq(0f, 1f), 1)))          // orthogonal
-    val out = RoundNineOps.embeddingIsotropy(d).collect()
+    val out = StatisticalAudits.embeddingIsotropy(d).collect()
       .map(r => r.getAs[Int]("label") -> r).toMap
     assert(out(0).getAs[Double]("isotropy_ratio") == 1.0)
     assert(out(0).getAs[Double]("avg_pair_dot") == out(0).getAs[Double]("avg_self_dot"))
@@ -120,12 +120,12 @@ class Round9OpsSpec extends SparkSpec {
       (1L, "the a and xxxxxxxxxx", "en"),
       (2L, "zz ee ee", "en"),
       (3L, "zz ee ee", "de")))
-    val r = RoundNineOps.cochranQ(d).collect()(0)
+    val r = StatisticalAudits.cochranQ(d).collect()(0)
     assert(r.getAs[Long]("n_items") == 3L)
     assert(r.getAs[Double]("cochran_q") == 0.6667)
     // every item unanimous → kT − ΣR² = 0 → undefined
     val u = docs(Seq((1L, "the a and", "en"), (2L, "the a and", "en")))
-    val ru = RoundNineOps.cochranQ(u).collect()(0)
+    val ru = StatisticalAudits.cochranQ(u).collect()(0)
     assert(ru.isNullAt(ru.fieldIndex("cochran_q")))
   }
 
@@ -133,13 +133,13 @@ class Round9OpsSpec extends SparkSpec {
 
   test("heapsLaw: one new token per doc fits beta = 1, constant vocab fits 0") {
     val unique = docs((1L to 64L).map(i => (i, s"tok$i", "en")))
-    val b1 = RoundNineOps.heapsLaw(unique).collect()
+    val b1 = StatisticalAudits.heapsLaw(unique).collect()
     assert(b1.forall(_.getAs[Double]("heaps_beta") == 1.0),
       "V(n) = n must fit slope exactly 1")
     assert(b1.map(r => (r.getAs[Long]("level"), r.getAs[Long]("n_docs")))
       .toMap.apply(0L) == 64L)
     val same = docs((1L to 64L).map(i => (i, "tok", "en")))
-    val b0 = RoundNineOps.heapsLaw(same).collect()
+    val b0 = StatisticalAudits.heapsLaw(same).collect()
     assert(b0.forall(_.getAs[Long]("vocab") == 1L))
     assert(b0.forall(_.getAs[Double]("heaps_beta") == 0.0),
       "constant vocabulary must fit slope exactly 0")
@@ -147,7 +147,7 @@ class Round9OpsSpec extends SparkSpec {
 
   test("heapsLaw: corpus levels nest and the exponent is a real fraction") {
     val d = spark.read.parquet(s"${sf("")}/documents.parquet")
-    val rows = RoundNineOps.heapsLaw(d).collect().sortBy(_.getAs[Long]("level"))
+    val rows = StatisticalAudits.heapsLaw(d).collect().sortBy(_.getAs[Long]("level"))
     rows.sliding(2).foreach { w =>
       assert(w(1).getAs[Long]("n_docs") <= w(0).getAs[Long]("n_docs"))
       assert(w(1).getAs[Long]("vocab") <= w(0).getAs[Long]("vocab"))
@@ -163,13 +163,13 @@ class Round9OpsSpec extends SparkSpec {
 
   test("renyiEfficiency: uniform tokens score 1, a dominated stream scores low") {
     val uni = docs(Seq((1L, "a b c d", "en")))
-    val r = RoundNineOps.renyiEfficiency(uni).collect()(0)
+    val r = StatisticalAudits.renyiEfficiency(uni).collect()(0)
     assert(r.getAs[Long]("vocab") == 4L)
     assert(r.getAs[Double]("renyi_efficiency") == 1.0)
     assert(r.getAs[Double]("renyi_h") ==
       BigDecimal(math.log(4.0)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     val skew = docs(Seq((1L, "a a a a a a a b", "en")))
-    val rs = RoundNineOps.renyiEfficiency(skew).collect()(0)
+    val rs = StatisticalAudits.renyiEfficiency(skew).collect()(0)
     assert(rs.getAs[Double]("renyi_efficiency") < 0.6)
   }
 
@@ -188,7 +188,7 @@ class Round9OpsSpec extends SparkSpec {
       .select(col("event_id"), col("user_id"),
         timestamp_micros(col("us")).as("ts"), col("event_type"),
         col("value"), col("props"))
-    val rows = RoundNineOps.sprtMonitor(ev).collect().sortBy(_.getAs[String]("day"))
+    val rows = StatisticalAudits.sprtMonitor(ev).collect().sortBy(_.getAs[String]("day"))
     assert(rows.length == 2)
     assert(rows(0).getAs[Long]("llr_micro") == 2176560L)
     assert(rows(0).getAs[String]("decision") == "continue")
@@ -205,7 +205,7 @@ class Round9OpsSpec extends SparkSpec {
       .withColumn("source", when(col("doc_id") <= 10, "A").otherwise("B"))
       .withColumn("n_chars",
         when(col("doc_id") <= 10, col("doc_id") * 10).otherwise(col("doc_id") * 10))
-    val out = RoundNineOps.quantileNormalize(d).collect()
+    val out = StatisticalAudits.quantileNormalize(d).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[Long]("decile")) -> r).toMap
     // A's median: values 10..100, p=0.5 → idx 4.5 → 55.0
     assert(out(("A", 5L)).getAs[Double]("src_cut") == 55.0)
@@ -229,7 +229,7 @@ class Round9OpsSpec extends SparkSpec {
       (1L, "t", "de", "s1", 1L), (2L, "t", "en", "s1", 2L), (3L, "t", "en", "s1", 3L),
       (4L, "t", "de", "s2", 101L), (5L, "t", "de", "s2", 102L), (6L, "t", "en", "s2", 103L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val out = RoundNineOps.simpsonAudit(d).collect()
+    val out = StatisticalAudits.simpsonAudit(d).collect()
       .map(r => r.getAs[String]("source") -> r).toMap
     assert(out("s1").getAs[Double]("corr_src") > 0)
     assert(out("s2").getAs[Double]("corr_src") > 0)
@@ -253,7 +253,7 @@ class Round9OpsSpec extends SparkSpec {
         when(col("doc_id") <= 50, col("doc_id") * 2)
           .when(col("doc_id") <= 100, (col("doc_id") - 50) * 2 - 1)
           .otherwise(col("doc_id") * 10))
-    val out = RoundNineOps.bhFdrDrift(d).collect()
+    val out = StatisticalAudits.bhFdrDrift(d).collect()
       .map(r => r.getAs[String]("source") -> r).toMap
     assert(out("sC").getAs[Boolean]("rejected"))
     assert(out("sC").getAs[Double]("ks_d") == 1.0)
@@ -269,7 +269,7 @@ class Round9OpsSpec extends SparkSpec {
     // the outlier (beyond the 9·D = 18 budget), 0.05 for the rest;
     // dim1 is zero-variance and contributes exactly 0
     val d = vecs((1L to 20L).map(i => (i, Seq(0f, 0f), 0)) :+ (21L, Seq(10f, 0f), 0))
-    val r = RoundNineOps.mahalanobisAudit(d).collect()(0)
+    val r = StatisticalAudits.mahalanobisAudit(d).collect()(0)
     assert(r.getAs[Long]("n_vecs") == 21L)
     assert(r.getAs[Long]("dims") == 2L)
     assert(r.getAs[Long]("max_md2_micro") == 20000000L)
@@ -281,7 +281,7 @@ class Round9OpsSpec extends SparkSpec {
 
   test("paddingWaste: constant lengths waste nothing randomly; bimodal does") {
     val const = docs((1L to 32L).map(i => (i, "a b c d e", "en")))
-    val r0 = RoundNineOps.paddingWaste(const).collect()(0)
+    val r0 = StatisticalAudits.paddingWaste(const).collect()(0)
     assert(r0.getAs[Long]("expected_max_micro") == 5000000L)
     assert(r0.getAs[Long]("random_waste_ppm") == 0L)
     // bucket ceiling 32: waste 27 of every 32 padded tokens
@@ -290,7 +290,7 @@ class Round9OpsSpec extends SparkSpec {
     // 1·(1/2^16) + 101·(1 − 1/2^16), per-value floors → 15 + 100998458
     val bimodal = docs((1L to 10L).map(i => (i, "a", "en")) ++
       (11L to 20L).map(i => (i, Seq.fill(101)("a").mkString(" "), "en")))
-    val r1 = RoundNineOps.paddingWaste(bimodal).collect()(0)
+    val r1 = StatisticalAudits.paddingWaste(bimodal).collect()(0)
     assert(r1.getAs[Long]("expected_max_micro") == 15L + 100998458L)
     assert(r1.getAs[Long]("random_waste_ppm") > 400000L,
       "random batching wastes ~half the padded tokens on a bimodal mix")
@@ -305,7 +305,7 @@ class Round9OpsSpec extends SparkSpec {
         Seq((201L, "t", "en"), (202L, "t", "en")))
       .withColumn("source", when(col("doc_id") <= 100, "A")
         .when(col("doc_id") <= 200, "B").otherwise("C"))
-    val out = RoundNineOps.ebShrinkage(d).collect()
+    val out = StatisticalAudits.ebShrinkage(d).collect()
       .map(r => r.getAs[String]("source") -> r).toMap
     val mu = out("A").getAs[Long]("mu_ppm").toDouble
     def frac(s: String) = {
@@ -319,7 +319,7 @@ class Round9OpsSpec extends SparkSpec {
     val flat = docs((1L to 20L).map(i =>
       (i, "t", if (i % 2 == 0) "en" else "de")))
       .withColumn("source", when(col("doc_id") <= 10, "A").otherwise("B"))
-    RoundNineOps.ebShrinkage(flat).collect().foreach { r =>
+    StatisticalAudits.ebShrinkage(flat).collect().foreach { r =>
       assert(r.getAs[Long]("shrunk_ppm") == r.getAs[Long]("raw_ppm"))
     }
   }
@@ -343,7 +343,7 @@ class Round9OpsSpec extends SparkSpec {
       .select(col("event_id"), col("user_id"),
         timestamp_micros(col("us")).as("ts"), col("event_type"),
         col("value"), col("props"))
-    val r = RoundNineOps.postStratifiedAte(ev).collect()(0)
+    val r = StatisticalAudits.postStratifiedAte(ev).collect()(0)
     assert(r.getAs[Long]("n_users") == 8L)
     assert(r.getAs[Long]("n_bands_used") == 2L)
     assert(r.getAs[Long]("naive_diff_micro") == 16000000L)
@@ -367,13 +367,13 @@ class Round9OpsSpec extends SparkSpec {
       2.801585218112969 * math.sqrt(
         2.0 * (pPpm / 1e6) * (1.0 - pPpm / 1e6) / nh) * 1e6).toLong
     // 20% vs 10%: p̄ = .15, harmonic n = 100 → MDE ≈ 0.1415 > 0.10 diff
-    val r0 = RoundNineOps.minDetectableEffect(ev(20, 10)).collect()(0)
+    val r0 = StatisticalAudits.minDetectableEffect(ev(20, 10)).collect()(0)
     assert(r0.getAs[Long]("p_ppm") == 150000L)
     assert(r0.getAs[Long]("mde_micro") == mde(150000L, 100.0))
     assert(r0.getAs[Long]("diff_micro") == 100000L)
     assert(!r0.getAs[Boolean]("powered"))
     // 80% vs 10%: diff 0.70 ≫ MDE → powered
-    val r1 = RoundNineOps.minDetectableEffect(ev(80, 10)).collect()(0)
+    val r1 = StatisticalAudits.minDetectableEffect(ev(80, 10)).collect()(0)
     assert(r1.getAs[Long]("diff_micro") == 700000L)
     assert(r1.getAs[Boolean]("powered"))
   }
@@ -382,7 +382,7 @@ class Round9OpsSpec extends SparkSpec {
 
   test("embeddingPsiDrift: identical halves score 0; a flipped half alarms") {
     val same = vecs((1L to 40L).map(i => (i, Seq(1f, 2f, -1f), 0)))
-    RoundNineOps.embeddingPsiDrift(same).collect().foreach { r =>
+    StatisticalAudits.embeddingPsiDrift(same).collect().foreach { r =>
       assert(r.getAs[Long]("n_ref") == r.getAs[Long]("n_cur"))
       assert(r.getAs[Double]("psi_part") == 0.0)
     }
@@ -390,7 +390,7 @@ class Round9OpsSpec extends SparkSpec {
     // sign buckets → large positive PSI mass
     val flipped = vecs((1L to 40L).map(i =>
       (i, if (i % 2 == 0) Seq(1f, 0f) else Seq(-1f, 0f), 0)))
-    val parts = RoundNineOps.embeddingPsiDrift(flipped).collect()
+    val parts = StatisticalAudits.embeddingPsiDrift(flipped).collect()
     assert(parts.map(_.getAs[Double]("psi_part")).sum > 1.0,
       "a fully separated population must alarm")
     assert(parts.length <= 64)
@@ -402,7 +402,7 @@ class Round9OpsSpec extends SparkSpec {
     // docs 1,2 are identical (one 2-cluster), doc 3 unique:
     // eff = 3/2 + 3/2 + 3 = 6 of 9 raw tokens → 666666 ppm
     val d = docs(Seq((1L, "a b c", "en"), (2L, "a b c", "en"), (3L, "x y z", "en")))
-    val r = RoundNineOps.dedupWeightedMass(d).collect()(0)
+    val r = StatisticalAudits.dedupWeightedMass(d).collect()(0)
     assert(r.getAs[Long]("n_docs") == 3L)
     assert(r.getAs[Long]("n_tokens") == 9L)
     assert(r.getAs[Long]("n_clustered") == 2L)
@@ -418,18 +418,18 @@ class Round9OpsSpec extends SparkSpec {
     val d = spark.read.parquet(s"${sf("")}/documents.parquet")
     val d7 = d.repartition(7)
     Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
-      RoundNineOps.poissonBootstrap(_),
-      RoundNineOps.heapsLaw(_),
-      RoundNineOps.renyiEfficiency(_),
-      RoundNineOps.ebShrinkage(_),
-      RoundNineOps.confidentLearning(_),
-      RoundNineOps.dawidSkene(_)
+      StatisticalAudits.poissonBootstrap(_),
+      StatisticalAudits.heapsLaw(_),
+      StatisticalAudits.renyiEfficiency(_),
+      StatisticalAudits.ebShrinkage(_),
+      StatisticalAudits.confidentLearning(_),
+      StatisticalAudits.dawidSkene(_)
     ).foreach { op =>
       assert(op(d).collect().toSeq == op(d7).collect().toSeq)
     }
     val e = spark.read.parquet(s"${sf("")}/embeddings.parquet")
-    assert(RoundNineOps.embeddingPsiDrift(e).collect().toSeq ==
-      RoundNineOps.embeddingPsiDrift(e.repartition(7)).collect().toSeq)
+    assert(StatisticalAudits.embeddingPsiDrift(e).collect().toSeq ==
+      StatisticalAudits.embeddingPsiDrift(e.repartition(7)).collect().toSeq)
   }
 
   // ---- q337 McNemar --------------------------------------------------------

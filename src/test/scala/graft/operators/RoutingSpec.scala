@@ -17,6 +17,18 @@ class RoutingSpec extends SparkSpec {
       4L -> "wf_even"))      // matches rule 3 only
   }
 
+  test("routeByRules' first-match expression grows linearly with the number of rules") {
+    val docs = Seq((1L, "src3"), (2L, null)).toDF("doc_id", "source")
+    def routed(n: Int) = Routing.routeByRules(docs,
+      (0 until n).map(i => Routing.RoutingRule(s"^src$i$$", s"wf$i", i)))
+    val sizes = (1 to 12).map(n => routed(n).queryExecution.analyzed
+      .collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum)
+    assert(sizes.zip(sizes.tail).map { case (a, b) => b - a }.distinct.size == 1, sizes)
+    // a null source matches no rule and gets the default
+    assert(routed(12).select("doc_id", "workflow").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "wf3"), (2L, "wf_default")))
+  }
+
   test("expandIdSlices generates pmod-sized ranges") {
     val nat = Seq(Tuple1(0), Tuple1(4)).toDF("n_nationkey")
     val got = Routing.expandIdSlices(nat)

@@ -151,6 +151,17 @@ class ReadersSpec extends SparkSpec {
     assert(Readers.sniffSeparator(spark, s"$gen/my-metadata.tsv") == "\t")
   }
 
+  test("csvSniffed reads with the sniffed separator, every column a string") {
+    val semi = tree("a.csv" -> "id;name\n1;x\n2;y\n").resolve("a.csv").toString
+    for ((path, rows) <- Seq(semi -> Seq(("1", "x"), ("2", "y")),
+                             s"$gen/raw/sample_001.csv" -> Seq(("1", "2")))) {
+      val df = Readers.csvSniffed(spark, path)
+      assert(df.columns.length == 2)
+      assert(df.schema.fields.forall(_.dataType == org.apache.spark.sql.types.StringType))
+      assert(df.as[(String, String)].collect().toSeq == rows)
+    }
+  }
+
   test("yaml reader parses devtest control file to JSON") {
     val df = Readers.yaml(spark, s"$dev/test.yml")
     val json = df.head().getAs[String]("json")

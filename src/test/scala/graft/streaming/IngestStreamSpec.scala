@@ -272,7 +272,7 @@ class IngestStreamSpec extends SparkSpec {
     // its OWN day stays open in the stream, so the batch comparison
     // excludes it (stream semantics: the open day is not yet decided)
     val flush = (ts("2024-01-10 00:00:00"), 9L, "view", 1.0)
-    val batch = graft.operators.RoundNineOps
+    val batch = graft.operators.StatisticalAudits
       .sprtMonitor((rows :+ flush).toDF("ts", "user_id", "event_type", "value"))
       .filter(col("day") < "2024-01-10")
       .collect().map(_.toString).toSeq
@@ -299,7 +299,7 @@ class IngestStreamSpec extends SparkSpec {
     val vecs: Seq[(Long, Seq[Float])] = (0L until 24L).map { i =>
       (i, (0 until 8).map(d => ((i * 7 + d * 13) % 11 - 5).toFloat / 4f))
     }
-    val batch = graft.operators.RoundNineOps
+    val batch = graft.operators.StatisticalAudits
       .embeddingPsiDrift(vecs.toDF("vec_id", "embedding"), projs = 4)
       .collect().map(_.toString).toSeq
     var last: Seq[String] = Seq.empty

@@ -50,8 +50,8 @@ class MonitorResumeSpec extends SparkSpec {
     assert(resumed != firstLife, "second life must fold the new vectors in")
     // uninterrupted reference: one batch pass over the union
     val all = mkVecs(0, 100).toDF("vec_id", "embedding")
-    val batchRef = graft.operators.RoundNineOps.psiFromCells(
-      graft.operators.RoundNineOps.psiBucketCells(all, projs = 4)).collect().toSeq
+    val batchRef = graft.operators.StatisticalAudits.psiFromCells(
+      graft.operators.StatisticalAudits.psiBucketCells(all, projs = 4)).collect().toSeq
     assert(resumed == batchRef,
       "restarted monitor must equal the uninterrupted cumulative fold")
     // durable state artifact exists and recorded the checkpoint
@@ -90,8 +90,8 @@ class MonitorResumeSpec extends SparkSpec {
     run()
     mkVecs(30, 80).toDF("vec_id", "embedding").write.mode("append").parquet(srcDir)
     run()
-    val batchRef = graft.operators.RoundNineOps.psiFromCells(
-      graft.operators.RoundNineOps.psiBucketCells(
+    val batchRef = graft.operators.StatisticalAudits.psiFromCells(
+      graft.operators.StatisticalAudits.psiBucketCells(
         mkVecs(0, 80).toDF("vec_id", "embedding"), projs = 4)).collect().toSeq
     assert(updates.last == batchRef,
       "scheme-qualified restart must equal the uninterrupted cumulative fold")
@@ -136,8 +136,8 @@ class MonitorResumeSpec extends SparkSpec {
     rmTree(java.nio.file.Paths.get(monDir, "ckpt"))
     mkVecs(40, 100).toDF("vec_id", "embedding").write.mode("append").parquet(srcDir)
     run()                                  // second life: fresh id, replays ALL files
-    val batchRef = graft.operators.RoundNineOps.psiFromCells(
-      graft.operators.RoundNineOps.psiBucketCells(
+    val batchRef = graft.operators.StatisticalAudits.psiFromCells(
+      graft.operators.StatisticalAudits.psiBucketCells(
         mkVecs(0, 100).toDF("vec_id", "embedding"), projs = 4)).collect().toSeq
     assert(updates.last == batchRef,
       "post-reset monitor must equal the uninterrupted fold over the full replay")
@@ -210,8 +210,8 @@ class MonitorResumeSpec extends SparkSpec {
     }
     assert(updates.size >= 8,
       s"soak must see one update per micro-batch (got ${updates.size})")
-    val batchRef = graft.operators.RoundNineOps.psiFromCells(
-      graft.operators.RoundNineOps.psiBucketCells(
+    val batchRef = graft.operators.StatisticalAudits.psiFromCells(
+      graft.operators.StatisticalAudits.psiBucketCells(
         mkVecs(0, 200).toDF("vec_id", "embedding"), projs = 4)).collect().toSeq
     assert(updates.last == batchRef,
       "soaked monitor must equal the uninterrupted cumulative fold")
@@ -261,7 +261,7 @@ class MonitorResumeSpec extends SparkSpec {
     val resumed = decisions.last
     // uninterrupted reference: the same finalized days {1, 2, 4} folded
     // through the SAME shared finisher
-    val ref = graft.operators.RoundNineOps.sprtFromDays(Seq(
+    val ref = graft.operators.StatisticalAudits.sprtFromDays(Seq(
       ("2024-01-01", 3L, 2L),
       ("2024-01-02", 3L, 1L),
       ("2024-01-04", 3L, 2L)).toDF("day", "n", "x")).collect().toSeq
