@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{FloatVecDot, LongVecSqDist, MinHashMd5, MultiPatternCounts, ShingleSet, SigMatchCount, SimHash64, TextMinHashMd5, TopKSketchAgg, UnicodeNormalize, WinnowFingerprints}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,8 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `topk_sketch(string, capacity)` aggregate in the function registry,
   * so `spark.sql` queries and downstream tools can call them. Every
   * [[GraftSession.local]] session installs it; a session built elsewhere
-  * can take it via `withExtensions(new GraftExtensions)` on its builder
-  * or post-hoc via [[GraftFunctions.register]].
+  * can take it via `withExtensions(new GraftExtensions)` on its builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
@@ -82,12 +81,5 @@ object GraftFunctions {
   val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     builders.map { case (name, builder) =>
       (FunctionIdentifier(name), new ExpressionInfo("graft.functions", name), builder)
-    }
-
-  /** Register on an existing session (tests, REPLs). */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
     }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's one session factory: every entry point (Bench, Verify,
-  * Profile, Explain and the `tools/` mains) and the test suites build
+  * Profile and the `tools/` mains) and the test suites build
   * their session here, so they all run the same configuration:
   *  - session time zone UTC and `nanosAsLong` (`events.parquet` may
   *    carry TIMESTAMP(NANOS); `Tables` normalizes it);
@@ -12,8 +12,7 @@ import org.apache.spark.sql.SparkSession
   *    partition counts; `spark.sql.shuffle.partitions` is the ceiling
   *    AQE coalesces down from;
   *  - the graft function registry installed as session extensions
-  *    ([[GraftExtensions]]), so `spark.sql` resolves `simhash64` & co.
-  *    without a [[GraftFunctions.register]] call;
+  *    ([[GraftExtensions]]), so `spark.sql` resolves `simhash64` & co.;
   *  - the Spark UI off: no entry point reads it, and every session
   *    would otherwise start its own Jetty server;
   *  - periodic ContextCleaner GC every 2 min (below);

@@ -388,14 +388,17 @@ object Modeling extends QueryModule {
     * four languages; B = e-letter-rate gate at 7.5%.
     */
   private[operators] def stopwordArgmaxEn: Column = {
-    val toks = split(lower(col("text")), " ")
-    def hits(ws: Seq[String]): Column =
-      size(filter(toks, w => ws.map(s => w === s).reduce(_ || _))).cast("long")
-    val en = hits(Seq("the", "a", "and"))
-    val es = hits(Seq("el", "la", "los"))
-    val de = hits(Seq("der", "die", "und"))
-    val fr = hits(Seq("le", "les", "des"))
+    val Seq(en, es, de, fr) = stopwordHits
     en >= es && en >= de && en >= fr && en > 0
+  }
+
+  /** Stopword hits of `text`'s lower-cased space tokens per language, in
+    * the argmax tie order: en, es, de, fr.
+    */
+  private[operators] def stopwordHits: Seq[Column] = {
+    val toks = split(lower(col("text")), " ")
+    Seq(Seq("the", "a", "and"), Seq("el", "la", "los"), Seq("der", "die", "und"), Seq("le", "les", "des"))
+      .map(ws => size(filter(toks, w => ws.map(s => w === s).reduce(_ || _))).cast("long"))
   }
 
   private[operators] def eRateEn: Column = {

@@ -86,13 +86,7 @@ object TextAnalysis extends QueryModule {
     * output is the deterministic scoring pipeline, not accuracy.)
     */
   def languageId(documents: DataFrame): DataFrame = {
-    val toks = tokens(lower(col("text")))
-    def hits(ws: Seq[String]): Column =
-      size(filter(toks, w => ws.map(s => w === s).reduce(_ || _))).cast("long")
-    val en = hits(Seq("the", "a", "and"))
-    val es = hits(Seq("el", "la", "los"))
-    val de = hits(Seq("der", "die", "und"))
-    val fr = hits(Seq("le", "les", "des"))
+    val Seq(en, es, de, fr) = Modeling.stopwordHits
     documents.select(
         col("doc_id"),
         col("lang"),
@@ -495,14 +489,7 @@ object TextAnalysis extends QueryModule {
     * confusion counts, all exact integers from ONE narrow pass.
     */
   def labelAgreementKappa(documents: DataFrame): DataFrame = {
-    val toks = tokens(lower(col("text")))
-    def hits(ws: Seq[String]): Column =
-      size(filter(toks, w => ws.map(s => w === s).reduce(_ || _))).cast("long")
-    val en = hits(Seq("the", "a", "and"))
-    val es = hits(Seq("el", "la", "los"))
-    val de = hits(Seq("der", "die", "und"))
-    val fr = hits(Seq("le", "les", "des"))
-    val predEn = en >= es && en >= de && en >= fr && en > 0
+    val predEn = Modeling.stopwordArgmaxEn
     val m = documents.select(
         (col("lang") === "en").as("ra"), predEn.as("rb"))
       .agg(count(lit(1)).as("n"),
@@ -540,19 +527,8 @@ object TextAnalysis extends QueryModule {
     * statistics score the SAME annotator panel.
     */
   private def enVoteCount: Column = {
-    val toks = tokens(lower(col("text")))
-    def hits(ws: Seq[String]): Column =
-      size(filter(toks, w => ws.map(s => w === s).reduce(_ || _))).cast("long")
-    val en = hits(Seq("the", "a", "and"))
-    val es = hits(Seq("el", "la", "los"))
-    val de = hits(Seq("der", "die", "und"))
-    val fr = hits(Seq("le", "les", "des"))
     val ra = (col("lang") === "en").cast("long")
-    val rb = (en >= es && en >= de && en >= fr && en > 0).cast("long")
-    val eCnt = (length(lower(col("text"))) -
-      length(regexp_replace(lower(col("text")), "e", ""))).cast("long")
-    val rc = (eCnt * 1000L >= length(col("text")).cast("long") * 75L).cast("long")
-    ra + rb + rc
+    ra + Modeling.stopwordArgmaxEn.cast("long") + Modeling.eRateEn.cast("long")
   }
 
   def fleissKappa(documents: DataFrame): DataFrame = {
@@ -624,14 +600,7 @@ object TextAnalysis extends QueryModule {
     * broadcast of the 1-row global frame — no second pass, no window.
     */
   def fairnessAudit(documents: DataFrame): DataFrame = {
-    val toks = tokens(lower(col("text")))
-    def hits(ws: Seq[String]): Column =
-      size(filter(toks, w => ws.map(s => w === s).reduce(_ || _))).cast("long")
-    val en = hits(Seq("the", "a", "and"))
-    val es = hits(Seq("el", "la", "los"))
-    val de = hits(Seq("der", "die", "und"))
-    val fr = hits(Seq("le", "les", "des"))
-    val predEn = en >= es && en >= de && en >= fr && en > 0
+    val predEn = Modeling.stopwordArgmaxEn
     val per = documents
       .select(col("source"), (col("lang") === "en").as("y"), predEn.as("p"))
       .groupBy("source").agg(

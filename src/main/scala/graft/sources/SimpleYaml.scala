@@ -135,7 +135,9 @@ object SimpleYaml {
     else jsonString(t)
   }
 
-  private def jsonString(s: String): String =
+  /** `s` as a JSON string literal, every control char escaped; Verify's
+    * oracle_sql.json and Bench's detail JSON write their strings with it. */
+  private[graft] def jsonString(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

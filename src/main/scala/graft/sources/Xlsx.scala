@@ -36,7 +36,7 @@ object Xlsx {
         val name = e.getName
         if (name == "xl/sharedStrings.xml" || name == "xl/workbook.xml" ||
             name == "xl/_rels/workbook.xml.rels" || name.startsWith("xl/worksheets/"))
-          parts(name) = readAll(zin)
+          parts(name) = new String(zin.readAllBytes(), "UTF-8")
         e = zin.getNextEntry
       }
     } finally zin.close()
@@ -75,14 +75,6 @@ object Xlsx {
   /** First sheet only (the reference's default `pd.read_excel` path). */
   def parseFirstSheet(bytes: Array[Byte]): Seq[Seq[String]] =
     parseSheets(bytes).headOption.map(_._2).getOrElse(Seq.empty)
-
-  private def readAll(in: java.io.InputStream): String = {
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toString("UTF-8")
-  }
 
   private val SiRe = "(?s)<si>(.*?)</si>".r
   private val TRe = "(?s)<t[^>]*>(.*?)</t>".r

@@ -284,13 +284,7 @@ object IngestStream {
     private def readFully(p: Path): String = {
       val fs = p.getFileSystem(hadoopConf)
       val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toString("UTF-8")
-      } finally in.close()
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
 
     /** Current checkpoint identity, or None while the query has never

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,8 +16,8 @@ import graft.status.StatusMachine
   * running it again compiles no class. This holds only while Spark's
   * JVM-global codegen cache ([[GraftSession.CodegenCacheEntries]]) is
   * larger than the workload's working set, and while no operation bakes
-  * a per-call value into generated code. Compiles are counted with
-  * Spark's `CodegenMetrics`.
+  * a per-call value into generated code. Compiles are counted by
+  * [[Recorder.record]].
   *
   * AQE picks a join's build side from whichever input stage finishes
   * first, so a query can run one of a few plans (q296 has several at
@@ -29,11 +28,7 @@ import graft.status.StatusMachine
 class CodegenResidencySpec extends SparkSpec {
   import spark.implicits._
 
-  private def compilesOf(body: => Unit): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
+  private def compilesOf(body: => Unit): Long = recorded(body).compiles
 
   /** Classes compiled by each pass of `pass(i)`, i = 1, 2, …, stopping
     * after the first pass that compiles none, or after `MaxPasses`.

@@ -6,7 +6,6 @@ class GraftFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("registered SQL functions evaluate") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT simhash64(array('a','b')) AS h, vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
       .head()
@@ -41,7 +40,6 @@ class GraftFunctionsSpec extends SparkSpec {
         hof.as("y"))
       .filter(col("x") =!= col("y")).count()
     assert(mismatches == 0)
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT sig_match_count(array('a','b','c'), array('a','x','c')) AS m").head()
     assert(r.getInt(0) == 2)
@@ -63,7 +61,6 @@ class GraftFunctionsSpec extends SparkSpec {
       .filter(col("x") =!= col("y")).count()
     assert(mismatches == 0)
     // self-distance is zero; callable from SQL after registration
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT vec_sqdist(array(1L, 5L), array(4L, 1L)) AS d").head()
     assert(r.getLong(0) == 25L) // 3² + 4²
@@ -78,7 +75,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("winnow, minhash, and topk_sketch are callable from SQL") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT size(winnow_fingerprints('the quick brown fox jumps over the lazy dog')) AS nw,
                 text_minhash_md5('a b c d e', 'salt0|') AS mh""").head()
@@ -90,7 +86,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("shingle_set and minhash_md5 are callable from SQL and compose") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT shingle_set('a b c d') AS sh,
                 shingle_set('a b c d', 2) AS sh2,

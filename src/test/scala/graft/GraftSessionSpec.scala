@@ -26,7 +26,7 @@ class GraftSessionSpec extends SparkSpec {
 
   test("shared test session resolves graft functions without GraftFunctions.register") {
     // a new session on the shared context starts from the extensions'
-    // function registry, so a register() by another suite can't leak in
+    // function registry alone
     val fresh = spark.newSession()
     val v = fresh.sql("SELECT simhash64(array('a','b'))").head().get(0)
     assert(v != null)

@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,37 +26,15 @@ trait SparkSpec extends AnyFunSuite {
       SparkSpec.stripComments(new String(Files.readAllBytes(p), "UTF-8")))
   }
 
-  /** Jobs fired by `body` on this thread (and the threads it spawns),
-    * counted by a listener keyed on a local property; a marker job
-    * afterwards drains the listener bus, which delivers events in order.
-    */
-  def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobs"
-    val tag = s"count-${System.nanoTime()}"
-    val counted = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => counted.incrementAndGet()
-          case Some(t) if t == s"$tag-end" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      body
-      sc.setLocalProperty(key, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      counted.get()
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
+  /** `body` run through [[Recorder.record]]; what it throws is rethrown. */
+  def recorded(body: => Unit): Recorder.Run = {
+    val run = Recorder.record(spark)(body)
+    run.failure.foreach(throw _)
+    run
   }
+
+  /** Jobs fired by `body` on this thread (and the threads it spawns). */
+  def jobsOf(body: => Unit): Int = recorded(body).jobs.size
 }
 
 object SparkSpec {

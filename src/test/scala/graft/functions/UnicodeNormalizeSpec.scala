@@ -42,7 +42,6 @@ class UnicodeNormalizeSpec extends SparkSpec {
   }
 
   test("SQL registration and codegen path agree with interpreted eval") {
-    graft.GraftFunctions.register(spark)
     val df = graft.Tables(spark, sf("")).documents.limit(50)
       .select(concat(col("text"), lit(" " + eAcuteNFD + " \ufb03")).as("t"))
     val viaSql = df.selectExpr("unicode_normalize(t, 'NFKC') AS n")
