@@ -1,11 +1,16 @@
 package graft
 
 import graft.functions.{FloatVecDot, LongVecSqDist, MinHashMd5, MultiPatternCounts, ShingleSet, SigMatchCount, SimHash64, TextMinHashMd5, TopKSketchAgg, UnicodeNormalize, WinnowFingerprints}
+import graft.plans.BoundedSort
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.unsafe.types.UTF8String
 
-/** SQL surface for graft's custom Catalyst expressions: registers
+/** graft's session extensions. They install one physical rule,
+  * [[graft.plans.BoundedSort]] (a bounded result's root sort runs on one
+  * partition, without the range exchange's sampling job), as an AQE
+  * query-stage preparation rule, and the SQL surface for graft's custom
+  * Catalyst expressions: they register
   * `simhash64(array<string>)`, `vec_dot(array<float>, array<float>)`,
   * `vec_sqdist(array<bigint>, array<bigint>)`,
   * `sig_match_count(array<string>, array<string>)`,
@@ -19,8 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * can take it via `withExtensions(new GraftExtensions)` on its builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
+    e.injectQueryStagePrepRule(_ => BoundedSort)
     GraftFunctions.descriptors.foreach(e.injectFunction)
+  }
 }
 
 object GraftFunctions {

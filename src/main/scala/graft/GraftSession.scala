@@ -13,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   *    AQE coalesces down from;
   *  - the graft function registry installed as session extensions
   *    ([[GraftExtensions]]), so `spark.sql` resolves `simhash64` & co.;
+  *  - with them the [[graft.plans.BoundedSort]] rule: a root `orderBy`
+  *    whose input is at most `spark.sql.autoBroadcastJoinThreshold` sorts
+  *    on one partition, with no range-sampling job;
   *  - the Spark UI off: no entry point reads it, and every session
   *    would otherwise start its own Jetty server;
   *  - periodic ContextCleaner GC every 2 min (below);
@@ -42,14 +45,16 @@ object GraftSession {
     * `CodegenMetrics` under an unbounded cache: the perfbench `reports`
     * round ~211 (warm-up included) and `ingest_api` ~129, so at 100 a
     * steady-state `reports` round recompiled ~135 classes (q296 alone
-    * 70) and an `ingest_api` round 55-70. 1,024 holds either workload
-    * about five times over. One pass of the full 349-query `graft.Bench`
-    * at sf0.01 compiles 4,424 distinct classes (warm-up excluded), so
-    * that pass does not fit: its queries run once each, and a re-timed
-    * attempt may compile its classes again (`codegen_compiles` in the
-    * Bench detail JSON shows it).
+    * 70) and an `ingest_api` round 55-70. One pass of the full 349-query
+    * `graft.Bench` at sf0.01 compiles about 4,400 distinct classes
+    * (warm-up excluded), which 8,192 holds. At 1,024 the pass did not
+    * fit: in two passes, 25 of 27 and 18 of 20 re-timed attempts
+    * compiled their classes again (`codegen_compiles` in the Bench
+    * detail JSON); at 8,192 one of 18 did: q316, 6 classes its first
+    * attempt had not generated (the cache was not full, so its second
+    * plan differed).
     */
-  val CodegenCacheEntries = 1024
+  val CodegenCacheEntries = 8192
 
   /** A `local[cores]` session with `cores` shuffle partitions. `cores`
     * defaults to `SPARK_GRAFT_CPUS` when set, else the JVM's processor

@@ -34,13 +34,17 @@ object RecallProbe {
 
     // q267/q295 exactly as registered (derived kc, pinned nprobe=2)
     val perQuery = Seq("q267_ivf_recall", "q295_ivfpq_recall").map { name =>
-      val t0 = System.nanoTime()
-      val recalls = graft.SparkEntry.queries(name)(spark, sfDir)
-        .select("recall").collect().map(_.getDouble(0)).toSeq
-      val secs = (System.nanoTime() - t0) / 1e9
+      var recalls = Seq.empty[Double]
+      val run = graft.Recorder.record(spark) {
+        recalls = graft.SparkEntry.queries(name)(spark, sfDir)
+          .select("recall").collect().map(_.getDouble(0)).toSeq
+      }
+      run.failure.foreach(throw _)
       val (mean, min) = stats(recalls)
-      System.err.println(f"[recall] $name kc=$kc mean=$mean%.4f min=$min%.4f (${secs}%.1f s)")
-      s""""$name":{"kc":$kc,"n_queries":${recalls.size},"mean":${fmt(mean)},"min":${fmt(min)}}"""
+      System.err.println(f"[recall] $name kc=$kc mean=$mean%.4f min=$min%.4f " +
+        f"(${run.wallS}%.1f s, ${run.jobs.size} jobs, ${run.compiles} codegen compiles)")
+      s""""$name":{"kc":$kc,"n_queries":${recalls.size},"mean":${fmt(mean)},"min":${fmt(min)},""" +
+        s""""jobs":${run.jobs.size},"codegen_compiles":${run.compiles}}"""
     }
     // nprobe curve at the derived kc (IVF path — the law's recall cost
     // as a function of probe width, the SCALE.md row's source)

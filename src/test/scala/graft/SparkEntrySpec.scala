@@ -1,7 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract smoke (gate t1): entry() returns rows at sf0.001,
-  * every declared query runs there, and every oracle key has a query.
+  * every declared query runs there within its job budget
+  * (`plans/job_budget.tsv`), and every oracle key has a query.
   */
 class SparkEntrySpec extends SparkSpec {
 
@@ -17,10 +22,26 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("every query executes at sf0.001 (schema resolves, no runtime error)") {
+    // Each query's full plan runs through the noop sink, as Bench runs
+    // it, and may fire at most its budget's jobs. The counts seen land in
+    // target/job_census.tsv; a change that cuts jobs lowers the budget
+    // from it, and one that raises an entry says why.
+    val budget = SparkEntrySpec.jobBudget
+    val census = Seq.newBuilder[String]
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, "/root/testdata/sf0.001").count(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(120)}") }
+      try {
+        val jobs = recorded(Bench.runFullPlan(fn(spark, "/root/testdata/sf0.001"))).jobs.size
+        census += s"$name\t$jobs"
+        budget.get(name) match {
+          case Some(b) if jobs <= b => None
+          case Some(b) => Some(s"$name: $jobs jobs, budget $b")
+          case None => Some(s"$name: $jobs jobs, no budget in ${SparkEntrySpec.BudgetFile}")
+        }
+      } catch { case e: Throwable => Some(s"$name: ${String.valueOf(e.getMessage).take(120)}") }
     }
+    Files.createDirectories(Paths.get("target"))
+    Files.write(Paths.get("target/job_census.tsv"),
+      census.result().mkString("", "\n", "\n").getBytes("UTF-8"))
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
@@ -43,4 +64,15 @@ class SparkEntrySpec extends SparkSpec {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+}
+
+object SparkEntrySpec {
+  val BudgetFile = "plans/job_budget.tsv"
+
+  /** Query name → the most jobs it may fire at sf0.001 in the shared test
+    * session (`#` lines are comments). */
+  def jobBudget: Map[String, Int] =
+    Files.readAllLines(Paths.get(BudgetFile)).asScala.toSeq
+      .filterNot(l => l.isEmpty || l.startsWith("#"))
+      .map { l => val Array(q, n) = l.split('\t'); q -> n.toInt }.toMap
 }
